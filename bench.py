@@ -25,27 +25,34 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def select_queries(registry: dict, subset: str | None) -> dict:
+    """OPTIONAL scaling-probe knob (ADDITIVE only — unset, the run is
+    byte-identical to the full bench): a comma-separated gate list
+    restricts the run so a probe can re-bench the heaviest gates at a
+    larger SF, where per-query compute finally dominates the fixed job
+    overhead that makes the sf0.1 core-count ratios pure noise (the
+    8-core total equals the 32-core total there). A name no query is
+    registered under is an error: a typo would otherwise shrink the
+    run silently. Example:
+      SPARK_GRAFT_SUBSET=$(python -c "import json; d=json.load(open(
+        'BENCH_LOCAL.json'))['queries']; print(','.join(sorted(
+        d, key=d.get)[-10:]))") \
+      SPARK_GRAFT_SF_DIR=<sf1 table dir> python bench.py"""
+    if not subset:
+        return registry
+    keep = {s.strip() for s in subset.split(",") if s.strip()}
+    unknown = sorted(keep - registry.keys())
+    if unknown:
+        raise ValueError(f"SPARK_GRAFT_SUBSET names no registered query: {', '.join(unknown)}")
+    return {k: v for k, v in registry.items() if k in keep}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("moloch_spark_bench", cpus=cpus)
-
-    registry = q.queries()
-    # OPTIONAL scaling-probe knob (r11 verdict item 8; ADDITIVE only —
-    # unset, the run is byte-identical to the full bench): a comma-
-    # separated gate list restricts the run so the driver can re-bench
-    # the heaviest gates at a larger SF, where per-query compute
-    # finally dominates the fixed job overhead that makes the sf0.1
-    # core-count ratios pure noise (the 8-core total equals the
-    # 32-core total there). Example probe:
-    #   SPARK_GRAFT_SUBSET=$(python -c "import json; d=json.load(open(
-    #     'BENCH_LOCAL.json'))['queries']; print(','.join(sorted(
-    #     d, key=d.get)[-10:]))") \
-    #   SPARK_GRAFT_SF_DIR=/root/testdata/sf1 python bench.py
     subset = os.environ.get("SPARK_GRAFT_SUBSET")
-    if subset:
-        keep = {s.strip() for s in subset.split(",") if s.strip()}
-        registry = {k: v for k, v in registry.items() if k in keep}
+    registry = select_queries(q.queries(), subset)
+    spark = get_spark("moloch_spark_bench", cpus=cpus)
 
     # warmup: tiny sf touches codegen/JIT for every query shape
     warm_dir = "/root/testdata/sf0.001"

@@ -412,6 +412,14 @@ def append_bm25_index(
     # so the batch-local dl IS each doc's final dl — the appended
     # postings rows carry it exactly like the build's
     post = _postings_with_dl(new_docs, text_col=text_col, id_col=id_col)
+    have = spark.table(f"{table_prefix}_postings").columns
+    if have != post.columns:
+        # an index built before postings carried dl: appending the new
+        # shape would fail inside saveAsTable with a schema mismatch
+        raise ValueError(
+            f"{table_prefix}_postings has columns {have}, appends write "
+            f"{post.columns}: rebuild required (build_bm25_index)"
+        )
     dl = post.select(id_col, "dl").dropDuplicates([id_col])
     (
         post.write.mode("append")

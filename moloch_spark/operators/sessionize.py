@@ -19,13 +19,14 @@ with true per-proto timeouts lives in moloch_spark.streaming.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from moloch_spark.operators.endpoints import dsum
-from moloch_spark.operators.timeutil import epoch_ms_fn
+from moloch_spark.operators.timeutil import epoch_ms_fn, epoch_us_fn
 
 
 def timeout_by_protocol(
@@ -71,19 +72,21 @@ def assign_sessions(
     df = df.filter(F.col(ts_col).isNotNull())
     keys = [F.col(k) for k in key_cols]
     w = Window.partitionBy(*keys).orderBy(F.col(ts_col), F.monotonically_increasing_id())
-    # millisecond epoch diff: exact integer math (unix_timestamp truncates
-    # to seconds, which would misclassify gaps within 1s of the timeout).
-    # epoch_ms_fn branches on the actual ts dtype — the driver's vanilla
-    # session reads the fixtures as TIMESTAMP_NTZ, ours as TIMESTAMP.
-    to_ms = epoch_ms_fn(df, ts_col)
+    # microsecond epoch diff, the streaming sessionizer's unit: exact
+    # integer math (unix_millis truncates, so a gap less than 1 ms over
+    # the timeout would close a session only in the stream). The
+    # converter branches on the actual ts dtype — a vanilla session
+    # reads the fixtures as TIMESTAMP_NTZ, get_spark's as TIMESTAMP; a
+    # long column stays epoch ms.
+    to_us = _epoch_us_fn(df, ts_col)
     prev_ts = F.lag(F.col(ts_col)).over(w)
-    gap = to_ms(F.col(ts_col)) - to_ms(prev_ts)
-    timeout_ms = (
-        F.lit(idle_timeout_s * 1000)
+    gap = to_us(F.col(ts_col)) - to_us(prev_ts)
+    timeout_us = (
+        F.lit(idle_timeout_s * 1_000_000)
         if isinstance(idle_timeout_s, int)
-        else idle_timeout_s.cast("long") * 1000
+        else idle_timeout_s.cast("long") * 1_000_000
     )
-    is_new = F.when(prev_ts.isNull() | (gap > timeout_ms), 1).otherwise(0)
+    is_new = F.when(prev_ts.isNull() | (gap > timeout_us), 1).otherwise(0)
     out = df.withColumn("_new", is_new).withColumn(
         "root_seq", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("_new")
@@ -91,11 +94,19 @@ def assign_sessions(
         return out.withColumn("session_seq", F.col("root_seq"))
     ws = Window.partitionBy(*keys, F.col("root_seq"))
     start = F.min(F.col(ts_col)).over(ws)
-    chunk = F.floor((to_ms(F.col(ts_col)) - to_ms(start)) / F.lit(chunk_s * 1000))
+    chunk = F.floor((to_us(F.col(ts_col)) - to_us(start)) / F.lit(chunk_s * 1_000_000))
     return out.withColumn("chunk_seq", chunk).withColumn(
         "session_seq",
         F.concat_ws("-", F.col("root_seq").cast("string"), F.col("chunk_seq").cast("string")),
     )
+
+
+def _epoch_us_fn(df: DataFrame, ts_col: str) -> Callable[[Column], Column]:
+    """Epoch microseconds of timestamp columns; a long column is epoch
+    ms (the epoch_ms_fn contract) and is scaled."""
+    if isinstance(df.schema[ts_col].dataType, (T.LongType, T.IntegerType)):
+        return lambda c: c.cast("long") * 1000
+    return epoch_us_fn(df, ts_col)
 
 
 def sessionize_events(

@@ -118,6 +118,12 @@ def shingle_explode(
     feeds both the (cheap field-access) size and the explode; the
     generator input is a struct field, not an attribute, so
     InferFiltersFromGenerate still stays out."""
+    clash = {"__toks", "__sh"} & set(df.columns)
+    if clash:
+        # withColumn would silently REPLACE a same-named caller column
+        raise ValueError(
+            f"shingle_explode: staging columns already present: {sorted(clash)}"
+        )
     ids = [F.col(c) for c in id_cols]
     staged = df.withColumn("__toks", tokens(text_col))
     sh = word_shingles(F.col("__toks"), n)

@@ -13,9 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Default heap: half of physical memory, at most 48 GiB (the heap
+    that kept full GCs out of a many-query session on a 128 GiB box),
+    at least 1 GiB. In local mode the driver heap is the executor heap,
+    so asking for more than the machine has invites the OOM killer."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mib = min(48 * 1024, phys_bytes // 2**21)
+    return f"{max(1024, mib)}m"
 
 
 def get_spark(app_name: str = "moloch_spark", *, cpus: int | None = None) -> SparkSession:
@@ -47,11 +60,20 @@ def get_spark(app_name: str = "moloch_spark", *, cpus: int | None = None) -> Spa
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        # Single-JVM local mode: the "driver" heap IS the executor heap.
-        # 48g of the 128g box keeps full GCs out of the bench timings
+        # Single-JVM local mode: the "driver" heap IS the executor heap
         # (16g showed multi-second GC outliers once ~70 query plans +
-        # broadcasts accumulate in one session).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # broadcasts accumulate in one session — hence the large default).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
+        # Python workers fork from moloch_spark.pyworker, which stops
+        # every task re-reading pyspark.zip's directory. Workers import
+        # moloch_spark anyway (the sessionizer's state functions are
+        # pickled by reference); the executor PYTHONPATH makes the
+        # daemon importable from any working directory.
+        .config("spark.python.daemon.module", "moloch_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # Long-running many-query sessions (bench, a Thrift-server-style
         # deployment) leak broadcast/shuffle state until a DRIVER GC lets
         # ContextCleaner's weak refs fire; with a 48g heap that can be

@@ -6,28 +6,50 @@ accumulate into per-session state, and the session flushes when idle
 longer than its protocol's timeout (tcp 480s, udp 60s, ... —
 capture/config.c:518-523).
 
-Spark shape: groupByKey(session key).applyInPandasWithState with
-EventTimeTimeout. State = ONE open session per key (the reference's
-hash-table entry); the watermark plays the role of the wall clock that
-drives the lazy expiry scan. Emission happens when (a) a gap inside a
-batch exceeds the timeout, or (b) the watermark passes last_seen +
-timeout (the state timeout callback).
+Spark shape: applyInPandasWithState grouped by a key BUCKET,
+``pmod(xxhash64(user_id), BUCKETS)``, not by the key itself — the
+reference's packet threads likewise own a hash slice of the session
+table. A bucket's state is the array of its keys' open sessions (one
+per key, the reference's hash-table entry), and each session carries
+its own timer. One call per bucket and micro-batch sorts the batch by
+(key, event time) and applies the per-key rule (``sessionize_bucket``):
+data first — an idle gap longer than the INCOMING event's protocol
+timeout closes the open session, ``chunk_s`` flushes mid-save chunks —
+then every session the batch did not touch whose timer lies below the
+clock is flushed. The bucket's own timer is re-armed to its earliest
+session timer, so Spark calls a bucket with no data exactly when one
+of its sessions is due; that call runs the same rule with no rows. The
+clock is the watermark (``streaming_sessionize``, EventTimeTimeout) or
+the batch's processing time (``streaming_sessionize_bounded``,
+ProcessingTimeTimeout, a per-session last-seen TTL).
 
-At 100 TB the state size is bounded by OPEN sessions only — identical
-to the reference's maxStreams sizing (capture/config.c:525) — and the
-shuffle is the same hash-by-key the reference's packet threads do.
+Grouping by bucket bounds the per-group framework cost (an Arrow round
+trip and a state-store put per group) by BUCKETS instead of by the
+number of keys in a batch; state size is still bounded by OPEN
+sessions only — the reference's maxStreams sizing
+(capture/config.c:525).
+
+Checkpoints written by the earlier per-key sessionizer (grouped by
+user_id, one session per state row) cannot be resumed: the grouping
+key and the state schema both changed. Start such a query from a new
+checkpoint location.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
+from dataclasses import dataclass
+from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# hash slices of the key space; each is one state row and one call
+BUCKETS = 64
 
 SESSION_SCHEMA = T.StructType(
     [
@@ -47,219 +69,6 @@ SESSION_SCHEMA = T.StructType(
     ]
 )
 
-# state: open-session accumulator (timestamps as epoch micros for exactness)
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("root_seq", T.LongType()),
-        T.StructField("first_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("packets", T.LongType()),
-        T.StructField("tot_bytes", T.DoubleType()),
-        T.StructField("event_types", T.ArrayType(T.StringType())),
-        T.StructField("root_us", T.LongType()),  # first_us of the ROOT chunk
-        T.StructField("chunk_seq", T.LongType()),
-        # last event's type: the expiry timer must re-arm with the OPEN
-        # session's per-protocol timeout even when a later batch
-        # contributes no surviving rows
-        T.StructField("last_etype", T.StringType()),
-    ]
-)
-
-
-def _emit_row(user_id: int, st: tuple) -> dict[str, Any]:
-    # state carries trailing bookkeeping fields (last_etype) the emitted
-    # row doesn't need — unpack the accumulator prefix only
-    root_seq, first_us, last_us, packets, tot_bytes, types, root_us, chunk_seq = st[:8]
-    # collect_set semantics: NULL event types never enter the set (a
-    # mixed None/str set would also crash the sort)
-    types = sorted({t for t in types if t is not None})
-    # a NULL session key yields NULL ids — an f-string would mint the
-    # literal 'nan#...' and silently collide NULL-key sessions
-    uid_null = user_id is None or (
-        isinstance(user_id, float) and user_id != user_id
-    )
-    return {
-        "user_id": user_id,
-        "root_seq": root_seq,
-        "first_packet": pd.Timestamp(first_us, unit="us"),
-        "last_packet": pd.Timestamp(last_us, unit="us"),
-        "packets": packets,
-        "tot_bytes": round(tot_bytes, 4),
-        "event_types": types,
-        "event_types_cnt": len(types),
-        # ids derive from (key, first-seen time), NOT a per-key counter:
-        # counters reset when timed-out state is evicted, so they collide
-        # across restarts; first_us is stable and replay-idempotent
-        "session_id": None if uid_null else f"{user_id}#{first_us}",
-        "root_id": None if uid_null else f"{user_id}#{root_us}",
-        "chunk_seq": chunk_seq,
-    }
-
-
-def _run_batch(user_id, st, pdfs, wm_us, _timeout_ms, chunk_us, out, overflow_tag):
-    """Shared in-batch accumulate loop for both sessionizer forms.
-
-    st: unpacked 9-tuple state or None; pdfs: the batch iterator; closed
-    sessions are appended to `out` (with overflow=False when
-    overflow_tag is True — in-batch closes are never forced). Returns
-    the new 9-tuple state, or None when nothing is open (every incoming
-    event fell below the watermark and no session was started)."""
-    if st is not None:
-        (root_seq, first_us, last_us, packets, tot_bytes, types,
-         root_us, chunk_seq, last_etype) = st
-        types = list(types)
-    else:
-        root_seq, first_us, last_us, packets, tot_bytes, types = (
-            0, None, None, 0, 0.0, []
-        )
-        root_us, chunk_seq, last_etype = None, 0, None
-
-    def emit(row_state):
-        row = _emit_row(user_id, row_state)
-        if overflow_tag:
-            row["overflow"] = False
-        out.append(row)
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts")
-    # drop events older than the watermark: they belong to sessions
-    # that may already have been emitted — merging them would corrupt
-    # counters (the watermark delay IS the lateness tolerance, exactly
-    # like dropDuplicatesWithinWatermark's contract)
-    for ts, value, etype in zip(
-        rows["ts"], rows["value"], rows["event_type"]
-    ):
-        ts_us = int(pd.Timestamp(ts).value // 1000)
-        if wm_us > 0 and ts_us < wm_us:
-            continue
-        if first_us is None:
-            root_seq += 1
-            first_us, last_us = ts_us, ts_us
-            packets, tot_bytes, types = 0, 0.0, []
-            root_us, chunk_seq = ts_us, 0
-        elif ts_us - last_us > _timeout_ms(etype) * 1000:
-            # idle gap inside the batch: close and start the next
-            emit((root_seq, first_us, last_us, packets, tot_bytes,
-                  types, root_us, chunk_seq))
-            root_seq += 1
-            first_us, last_us = ts_us, ts_us
-            packets, tot_bytes, types = 0, 0.0, []
-            root_us, chunk_seq = ts_us, 0
-        elif chunk_us is not None and ts_us - first_us >= chunk_us:
-            # mid-save: flush the running chunk, keep the session
-            # identity (root_us) and advance the chunk counter
-            emit((root_seq, first_us, last_us, packets, tot_bytes,
-                  types, root_us, chunk_seq))
-            first_us, last_us = ts_us, ts_us
-            packets, tot_bytes, types = 0, 0.0, []
-            chunk_seq += 1
-        packets += 1
-        tot_bytes += float(value)
-        if etype not in types:
-            types.append(etype)
-        last_us = max(last_us, ts_us)
-        last_etype = etype
-
-    if first_us is None:
-        # a NEW key whose entire first batch fell below the watermark:
-        # nothing to accumulate and no open session — storing state
-        # here would arm a timer off last_us=None and crash the query
-        return None
-    return (root_seq, first_us, last_us, packets, tot_bytes, types,
-            root_us, chunk_seq, last_etype)
-
-
-def make_session_fn(
-    idle_timeout_s: int,
-    chunk_s: int | None = None,
-    timeout_by_type: dict[str, int] | None = None,
-):
-    """chunk_s = the tcpSaveTimeout analog: a session open longer than
-    chunk_s is flushed as a partial chunk (counters reset, root_id and
-    first-seen identity retained) — capture/session.c:312-357.
-
-    timeout_by_type = the per-protocol idle timeouts
-    (capture/config.c:518-523: tcp 480, udp 60, icmp 10, ...): the gap
-    decision uses the INCOMING event's type, `idle_timeout_s` is the
-    default — same semantics as the batch `timeout_by_protocol` column,
-    so batch and streaming stay result-identical."""
-    timeout_ms = idle_timeout_s * 1000
-    by_type_ms = {k: v * 1000 for k, v in (timeout_by_type or {}).items()}
-    chunk_us = chunk_s * 1_000_000 if chunk_s else None
-
-    def _timeout_ms(etype) -> int:
-        return by_type_ms.get(etype, timeout_ms)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        out: list[dict] = []
-
-        if state.hasTimedOut:
-            # watermark passed last_seen + timeout: flush the open session
-            out.append(_emit_row(user_id, state.get))
-            state.remove()
-            yield pd.DataFrame(out)
-            return
-
-        st = state.get if state.exists else None
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        new_st = _run_batch(
-            user_id, st, pdfs, wm_us, _timeout_ms, chunk_us, out, False
-        )
-        if new_st is None:
-            if out:
-                yield pd.DataFrame(out)
-            return
-
-        state.update(new_st)
-        # expire when the watermark passes last_seen + idle timeout; after
-        # a restart the restored watermark may already be past that point
-        # (the session should have closed during downtime) — clamp above
-        # the watermark so it flushes on the next timeout pass instead of
-        # failing INVALID_TIMEOUT_TIMESTAMP. The timer re-arms with the
-        # OPEN session's last event type (persisted in state, so a batch
-        # contributing no surviving rows keeps the per-proto timeout).
-        last_us, last_etype = new_st[2], new_st[8]
-        arm_ms = _timeout_ms(last_etype) if last_etype is not None else timeout_ms
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(last_us // 1000 + arm_ms, wm + 1))
-        if out:
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def streaming_sessionize(
-    events: DataFrame,
-    *,
-    idle_timeout_s: int = 1800,
-    chunk_s: int | None = None,
-    timeout_by_type: dict[str, int] | None = None,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """events (streaming DF with ts/user_id/event_type/value) -> stream of
-    CLOSED sessions (and mid-save chunks when chunk_s is set);
-    timeout_by_type gives per-protocol idle timeouts.
-
-    NULL-ts rows are dropped (the batch sessionizer's contract): an
-    event without event time cannot participate in watermarked idle
-    timing, and whether the engine would silently drop or deliver it
-    to the state fn is version-dependent — make it deterministic."""
-    return (
-        events.filter(F.col("ts").isNotNull())
-        .withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_session_fn(idle_timeout_s, chunk_s, timeout_by_type),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 OVERFLOW_SESSION_SCHEMA = T.StructType(
     SESSION_SCHEMA.fields
     + [
@@ -271,72 +80,254 @@ OVERFLOW_SESSION_SCHEMA = T.StructType(
 )
 
 
-def make_bounded_session_fn(
-    idle_timeout_s: int,
-    state_ttl_s: int,
-    chunk_s: int | None = None,
-    timeout_by_type: dict[str, int] | None = None,
-):
-    """maxStreams-analog state guardrail (capture/config.c:525,568-573;
-    session.c:517-531): the reference hard-caps its session hash table
-    and force-saves the oldest entries when full. Spark's
-    applyInPandasWithState cannot enumerate or evict OTHER keys' state
-    from inside one key's call, so the native equivalent of an LRU cap
-    is a PROCESSING-TIME TTL: any key silent for state_ttl_s wall
-    seconds is force-flushed (tagged overflow=True when its event-time
-    close wasn't due yet), no matter whether the watermark has stalled.
-    That bounds state to (keys active in the last ttl window) ≈
-    ingest_rate × ttl — the same resource bound maxStreams provides,
-    expressed in time instead of entries. Event-time semantics inside a
-    batch (idle-gap close, mid-save chunking, per-proto timeouts) are
-    identical to make_session_fn (shared _run_batch)."""
-    timeout_ms = idle_timeout_s * 1000
-    by_type_ms = {k: v * 1000 for k, v in (timeout_by_type or {}).items()}
-    chunk_us = chunk_s * 1_000_000 if chunk_s else None
-    ttl_ms = state_ttl_s * 1000
+@dataclass(slots=True)
+class _Session:
+    """One key's open session (timestamps as epoch micros for exactness)."""
 
-    def _timeout_ms(etype) -> int:
-        return by_type_ms.get(etype, timeout_ms)
+    root_seq: int
+    first_us: int
+    last_us: int
+    packets: int
+    tot_bytes: float
+    types: list
+    root_us: int  # first_us of the ROOT chunk
+    chunk_seq: int
+    last_etype: str | None  # the newest event's type arms the idle timer
+    # when the session is due on the sessionizer's clock (watermark or
+    # processing time), in epoch ms
+    timer_ms: int
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        out: list[dict] = []
 
-        if state.hasTimedOut:
-            st = state.get
-            last_us, last_etype = st[2], st[8]
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            # overflow iff the event-time close wasn't due yet — i.e. the
-            # watermark hadn't reached last_seen + idle timeout and we are
-            # evicting purely to bound state
-            due_us = last_us + _timeout_ms(last_etype) * 1000
-            row = _emit_row(user_id, st)
-            row["overflow"] = bool(wm_us < due_us)
-            out.append(row)
-            state.remove()
-            yield pd.DataFrame(out)
-            return
-
-        st = state.get if state.exists else None
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        new_st = _run_batch(
-            user_id, st, pdfs, wm_us, _timeout_ms, chunk_us, out, True
+# state: one row per bucket, its open sessions as parallel arrays
+STATE_SCHEMA = T.StructType(
+    [T.StructField("user_id", T.ArrayType(T.LongType()))]
+    + [
+        T.StructField(name, T.ArrayType(dt))
+        for name, dt in zip(
+            _Session.__slots__,
+            [T.LongType(), T.LongType(), T.LongType(), T.LongType(),
+             T.DoubleType(), T.ArrayType(T.StringType()), T.LongType(),
+             T.LongType(), T.StringType(), T.LongType()],
         )
-        if new_st is None:
-            if out:
-                yield pd.DataFrame(out)
-            return
+    ]
+)
 
-        state.update(new_st)
-        # wall-clock TTL, not a watermark timer: fires even when the
-        # watermark stalls — the whole point of the guardrail
-        state.setTimeoutDuration(ttl_ms)
-        if out:
-            yield pd.DataFrame(out)
+
+class SessionRule(NamedTuple):
+    """The per-key sessionization rule's parameters.
+
+    default_ms / by_type_ms: idle timeouts, the per-protocol map keyed
+    by event type (capture/config.c:518-523); chunk_us: the mid-save
+    chunk length or None; ttl_ms: None for event-time expiry (a
+    session is due at last seen + its idle timeout), else the
+    processing-time TTL after the session was last touched."""
+
+    default_ms: int
+    by_type_ms: dict
+    chunk_us: int | None
+    ttl_ms: int | None = None
+
+    @classmethod
+    def of(cls, idle_timeout_s, chunk_s=None, timeout_by_type=None, ttl_s=None):
+        return cls(
+            idle_timeout_s * 1000,
+            {k: v * 1000 for k, v in (timeout_by_type or {}).items()},
+            chunk_s * 1_000_000 if chunk_s else None,
+            ttl_s * 1000 if ttl_s else None,
+        )
+
+    def timeout_ms(self, etype) -> int:
+        return self.by_type_ms.get(etype, self.default_ms)
+
+
+def sessionize_bucket(
+    sessions: dict, rows: pd.DataFrame | None, *, wm_ms: int, now_ms: int, rule: SessionRule
+) -> list[tuple]:
+    """Advance one bucket's open ``sessions`` (key -> _Session, updated
+    in place) by one micro-batch of ``rows`` (ts, user_id, key_null,
+    event_type, value; None on a timer call). Returns the closed
+    sessions and chunks as (key, _Session, overflow) tuples.
+
+    Per key, in event-time order within the batch: a row below the
+    watermark is dropped — it may belong to a session already emitted
+    (the watermark delay IS the lateness tolerance, like
+    dropDuplicatesWithinWatermark's contract); a row more than its own
+    protocol's timeout after the open chunk's newest row closes the
+    session and opens the next; a row ``chunk_us`` or more after the
+    chunk's first row flushes the chunk and keeps the session identity
+    (root_us) — capture/session.c:312-357. A key the batch touched
+    re-arms its timer; afterwards every untouched session whose timer
+    is below the clock is flushed."""
+    wm_us = wm_ms * 1000
+    closed: list[tuple] = []
+    touched: set = set()
+    if rows is not None and len(rows):
+        ts_us = rows["ts"].to_numpy(dtype="datetime64[ns]").view("int64") // 1000
+        uid = rows["user_id"].to_numpy(dtype="int64")
+        null = rows["key_null"].to_numpy(dtype=bool)
+        # np.lexsort is stable: equal times keep arrival order
+        order = np.lexsort((ts_us, uid, null))
+        keys = [None if n else int(u) for u, n in zip(uid[order], null[order])]
+        touched = set(keys)
+        batch = zip(keys, ts_us[order].tolist(),
+                    rows["value"].to_numpy(dtype=float)[order].tolist(),
+                    rows["event_type"].to_numpy(dtype=object)[order].tolist())
+        for key, ts, value, etype in batch:
+            if wm_us > 0 and ts < wm_us:
+                continue
+            ses = sessions.get(key)
+            if ses is None:
+                ses = sessions[key] = _Session(1, ts, ts, 0, 0.0, [], ts, 0, None, 0)
+            elif ts - ses.last_us > rule.timeout_ms(etype) * 1000:
+                # idle gap inside the batch: close and start the next
+                closed.append((key, ses, False))
+                ses = sessions[key] = _Session(ses.root_seq + 1, ts, ts, 0, 0.0, [], ts, 0, None, 0)
+            elif rule.chunk_us is not None and ts - ses.first_us >= rule.chunk_us:
+                # mid-save: flush the running chunk, keep the session
+                closed.append((key, ses, False))
+                ses = sessions[key] = _Session(
+                    ses.root_seq, ts, ts, 0, 0.0, [], ses.root_us, ses.chunk_seq + 1, None, 0
+                )
+            ses.packets += 1
+            ses.tot_bytes += value
+            if etype not in ses.types:
+                ses.types.append(etype)
+            ses.last_us = max(ses.last_us, ts)
+            ses.last_etype = etype
+
+    clock_ms = wm_ms if rule.ttl_ms is None else now_ms
+    for key in list(sessions):
+        ses = sessions[key]
+        if key in touched:
+            if rule.ttl_ms is None:
+                # after a restart the restored watermark may already be
+                # past last seen + timeout (the session should have
+                # closed during downtime): clamp above the watermark so
+                # it flushes on the next timer pass
+                ses.timer_ms = max(ses.last_us // 1000 + rule.timeout_ms(ses.last_etype), wm_ms + 1)
+            else:
+                ses.timer_ms = now_ms + rule.ttl_ms
+        elif ses.timer_ms < clock_ms:
+            # overflow iff the event-time close was not due yet — the
+            # TTL evicts purely to bound state
+            due_us = ses.last_us + rule.timeout_ms(ses.last_etype) * 1000
+            closed.append((key, ses, rule.ttl_ms is not None and wm_us < due_us))
+            del sessions[key]
+    return closed
+
+
+def _closed_frame(closed: list[tuple], with_overflow: bool) -> pd.DataFrame:
+    keys = [k for k, _, _ in closed]
+    first_us = np.array([s.first_us for _, s, _ in closed], dtype="int64")
+    last_us = np.array([s.last_us for _, s, _ in closed], dtype="int64")
+    # collect_set semantics: NULL event types never enter the set (a
+    # mixed None/str set would also crash the sort)
+    types = [sorted({t for t in s.types if t is not None}) for _, s, _ in closed]
+    out = {
+        "user_id": pd.array(keys, dtype="Int64"),
+        "root_seq": [s.root_seq for _, s, _ in closed],
+        "first_packet": pd.to_datetime(first_us, unit="us"),
+        "last_packet": pd.to_datetime(last_us, unit="us"),
+        "packets": [s.packets for _, s, _ in closed],
+        "tot_bytes": [round(s.tot_bytes, 4) for _, s, _ in closed],
+        "event_types": types,
+        "event_types_cnt": [len(t) for t in types],
+        # ids derive from (key, first-seen time), NOT a per-key counter:
+        # counters reset when timed-out state is evicted, so they collide
+        # across restarts; first_us is stable and replay-idempotent. A
+        # NULL key yields NULL ids — minting 'None#...' would silently
+        # collide NULL-key sessions
+        "session_id": [None if k is None else f"{k}#{s.first_us}" for k, s, _ in closed],
+        "root_id": [None if k is None else f"{k}#{s.root_us}" for k, s, _ in closed],
+        "chunk_seq": [s.chunk_seq for _, s, _ in closed],
+    }
+    if with_overflow:
+        out["overflow"] = [o for _, _, o in closed]
+    return pd.DataFrame(out)
+
+
+def _bucket_fn(rule: SessionRule):
+    """The applyInPandasWithState function: state arrays <-> sessions
+    dict around one sessionize_bucket call, then the bucket timer."""
+
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        sessions = {k: _Session(*rest) for k, *rest in zip(*state.get)} if state.exists else {}
+        frames = list(pdfs)
+        rows = pd.concat(frames, ignore_index=True) if frames else None
+        now_ms = state.getCurrentProcessingTimeMs()
+        closed = sessionize_bucket(
+            sessions, rows, wm_ms=state.getCurrentWatermarkMs(), now_ms=now_ms, rule=rule
+        )
+        if sessions:
+            state.update(
+                (list(sessions),)
+                + tuple([getattr(s, f) for s in sessions.values()] for f in _Session.__slots__)
+            )
+            due_ms = min(s.timer_ms for s in sessions.values())
+            if rule.ttl_ms is None:
+                state.setTimeoutTimestamp(due_ms)
+            else:
+                state.setTimeoutDuration(max(1, due_ms - now_ms))
+        elif state.exists:
+            state.remove()
+        if closed:
+            yield _closed_frame(closed, rule.ttl_ms is not None)
 
     return fn
+
+
+def _sessionize(events: DataFrame, watermark_delay: str, rule: SessionRule) -> DataFrame:
+    """NULL-ts rows are dropped (the batch sessionizer's contract): an
+    event without event time cannot participate in watermarked idle
+    timing. A NULL key is its own key (key_null): the pandas form of a
+    nullable long column is float64, which would round 64-bit keys."""
+    uid = F.col("user_id")
+    ttl = rule.ttl_ms is not None
+    return (
+        events.filter(F.col("ts").isNotNull())
+        .withWatermark("ts", watermark_delay)
+        .select(
+            F.pmod(F.xxhash64(uid), F.lit(BUCKETS)).alias("bucket"),
+            "ts",
+            F.coalesce(uid, F.lit(0)).alias("user_id"),
+            uid.isNull().alias("key_null"),
+            "event_type",
+            "value",
+        )
+        .groupBy("bucket")
+        .applyInPandasWithState(
+            _bucket_fn(rule),
+            outputStructType=OVERFLOW_SESSION_SCHEMA if ttl else SESSION_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout if ttl else GroupStateTimeout.EventTimeTimeout
+            ),
+        )
+    )
+
+
+def streaming_sessionize(
+    events: DataFrame,
+    *,
+    idle_timeout_s: int = 1800,
+    chunk_s: int | None = None,
+    timeout_by_type: dict[str, int] | None = None,
+    watermark_delay: str = "10 minutes",
+) -> DataFrame:
+    """events (streaming DF with ts/user_id/event_type/value) -> stream of
+    CLOSED sessions (and mid-save chunks when chunk_s is set).
+
+    chunk_s = the tcpSaveTimeout analog: a session open longer than
+    chunk_s is flushed as a partial chunk (counters reset, root_id and
+    first-seen identity retained) — capture/session.c:312-357.
+    timeout_by_type = the per-protocol idle timeouts
+    (capture/config.c:518-523: tcp 480, udp 60, icmp 10, ...): the gap
+    decision uses the INCOMING event's type, `idle_timeout_s` is the
+    default — the batch `timeout_by_protocol` column's semantics. An
+    open session flushes when the watermark passes its last event plus
+    that event's timeout. NULL-ts rows are dropped."""
+    return _sessionize(events, watermark_delay, SessionRule.of(idle_timeout_s, chunk_s, timeout_by_type))
 
 
 def streaming_sessionize_bounded(
@@ -348,27 +339,22 @@ def streaming_sessionize_bounded(
     timeout_by_type: dict[str, int] | None = None,
     watermark_delay: str = "10 minutes",
 ) -> DataFrame:
-    """streaming_sessionize with the maxStreams-analog state guardrail:
-    keys silent for state_ttl_s WALL seconds are force-flushed with
-    overflow=True even if the watermark has stalled, so state never
-    outgrows ingest_rate × ttl. Uses ProcessingTimeTimeout (a wall
-    clock), hence results are not bit-reproducible across replays the
-    way the EventTimeTimeout form is — the same determinism trade the
-    reference makes when maxStreams evicts under pressure.
-    NULL-ts rows are dropped (same contract as streaming_sessionize)."""
-    return (
-        events.filter(F.col("ts").isNotNull())
-        .withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_bounded_session_fn(
-                idle_timeout_s, state_ttl_s, chunk_s, timeout_by_type
-            ),
-            outputStructType=OVERFLOW_SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    """streaming_sessionize with the maxStreams-analog state guardrail
+    (capture/config.c:525,568-573; session.c:517-531): the reference
+    hard-caps its session hash table and force-saves the oldest entries
+    when full. Here a session whose key was silent for state_ttl_s WALL
+    seconds is force-flushed, tagged overflow=True when its event-time
+    close was not due yet, even if the watermark has stalled — so state
+    never outgrows ingest_rate × ttl, the same resource bound maxStreams
+    provides, expressed in time instead of entries. In-batch semantics
+    (idle-gap close, mid-save chunking, per-proto timeouts) are
+    streaming_sessionize's; there is no watermark flush. Uses
+    ProcessingTimeTimeout (a wall clock), hence results are not
+    bit-reproducible across replays the way the EventTimeTimeout form
+    is — the same determinism trade the reference makes when
+    maxStreams evicts under pressure. NULL-ts rows are dropped."""
+    return _sessionize(
+        events, watermark_delay, SessionRule.of(idle_timeout_s, chunk_s, timeout_by_type, state_ttl_s)
     )
 
 

@@ -644,6 +644,27 @@ def test_bm25_index_append_equals_rebuild(spark, tmp_path):
                 spark.sql(f"DROP TABLE IF EXISTS {p}_{t}")
 
 
+def test_bm25_append_to_index_without_dl_requires_rebuild(spark, tmp_path):
+    """Postings written before they carried dl cannot take appends of
+    the (doc, term, tf, dl) shape: append_bm25_index says to rebuild
+    instead of failing inside saveAsTable."""
+    from moloch_spark.operators import retrieval as R
+
+    prefix = "bm25idx_test_legacy"
+    corpus = spark.createDataFrame([(1, "alpha beta"), (2, "beta gamma")], ["doc_id", "text"])
+    try:
+        spark.createDataFrame([(1, "alpha", 1)], "doc_id long, term string, tf long").write.format(
+            "parquet"
+        ).bucketBy(8, "term").sortBy("term").option("path", str(tmp_path / "post")).saveAsTable(
+            f"{prefix}_postings"
+        )
+        with pytest.raises(ValueError, match="rebuild required"):
+            R.append_bm25_index(spark, corpus, prefix, buckets=8)
+        assert spark.table(f"{prefix}_postings").count() == 1
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_postings")
+
+
 def test_bm25_index_append_stream_equals_rebuild(spark, tmp_path):
     """Continuous maintenance: new crawl batches arriving THROUGH
     Structured Streaming (foreachBatch -> append_bm25_index, one file
@@ -1233,6 +1254,15 @@ def test_shingle_explode_plan_and_rows(spark):
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, legacy.collect())
     )
+
+
+@pytest.mark.parametrize("staging", ["__toks", "__sh"])
+def test_shingle_explode_rejects_staging_column_collision(spark, staging):
+    from moloch_spark.operators.text import shingle_explode
+
+    df = spark.createDataFrame([(1, "a b c d", "keep")], ["doc_id", "text", staging])
+    with pytest.raises(ValueError, match=staging):
+        shingle_explode(df, n=3)
 
 
 def test_postings_carry_dl(spark):

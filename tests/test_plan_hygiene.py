@@ -117,3 +117,14 @@ def test_every_query_has_oracle_or_reason():
     assert missing == {
         "embedding_pca_whiten",
     }, missing
+
+
+def test_bench_subset_rejects_unknown_names():
+    import bench
+
+    registry = all_queries()
+    name = sorted(registry)[0]
+    assert list(bench.select_queries(registry, f" {name} ,")) == [name]
+    assert bench.select_queries(registry, None) is registry
+    with pytest.raises(ValueError, match="no_such_gate"):
+        bench.select_queries(registry, f"{name},no_such_gate")

@@ -500,11 +500,12 @@ def test_streaming_timeline_matches_batch(spark, events_stream_dir):
         assert all(m > max_emitted for m in missing)
 
 
-def test_streaming_state_is_bounded_by_open_sessions(spark, events_stream_dir):
-    """The maxStreams-analog claim (capture/config.c:525): state rows =
+def test_streaming_state_is_bounded_by_open_sessions(spark, events_stream_dir, tmp_path):
+    """The maxStreams-analog claim (capture/config.c:525): state holds
     OPEN sessions only. After the stream drains, the state store must
-    hold far fewer rows than the total sessions emitted — timed-out
-    state is evicted, not accumulated."""
+    hold far fewer sessions than were emitted — closed sessions are
+    evicted, not accumulated. A state row is a key bucket; its open
+    sessions are its arrays' entries, read with the statestore source."""
     schema = load_table(spark, "events", SF).schema
     stream = (
         spark.readStream.schema(schema)
@@ -514,27 +515,50 @@ def test_streaming_state_is_bounded_by_open_sessions(spark, events_stream_dir):
     sessions = streaming_sessionize(
         stream, idle_timeout_s=1800, watermark_delay="1 minute"
     )
+    ckpt = str(tmp_path / "ckpt")
     q = (
         sessions.writeStream.format("memory")
         .queryName("state_bound_out")
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(300)
     emitted = spark.sql("SELECT COUNT(*) c FROM state_bound_out").first().c
-    state_rows = None
-    for p in reversed(q.recentProgress):
-        ops = p.get("stateOperators") or []
-        if ops:
-            state_rows = ops[0]["numRowsTotal"]
-            break
-    assert emitted > 0 and state_rows is not None
-    # residual state = sessions still open at end-of-stream (one per key
-    # at most); anything near `emitted` would mean eviction is broken
+    open_keys = spark.read.format("statestore").load(ckpt).select(
+        F.explode("value.groupState.user_id").alias("k")
+    )
+    n_open = open_keys.count()
+    assert emitted > 0 and n_open > 0
+    # residual state = sessions still open at end-of-stream, one per key
+    # at most; anything near `emitted` would mean eviction is broken
+    assert open_keys.distinct().count() == n_open
     n_keys = load_table(spark, "events", SF).select("user_id").distinct().count()
-    assert state_rows <= n_keys, (state_rows, n_keys)
-    assert state_rows < emitted, (state_rows, emitted)
+    assert n_open <= n_keys, (n_open, n_keys)
+    assert n_open < emitted, (n_open, emitted)
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_batch_idle_gap_is_exact_to_the_microsecond(spark, ts_type):
+    """The batch sessionizer compares idle gaps in µs, as the stream
+    does: a udp gap 0.5 ms over its 60 s timeout closes the session, one
+    0.5 ms under it does not."""
+    from moloch_spark.operators.sessionize import timeout_by_protocol
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (t0, 1, "udp", 1.0),
+        (t0 + dt.timedelta(seconds=60, microseconds=500), 1, "udp", 1.0),
+        (t0, 2, "udp", 1.0),
+        (t0 + dt.timedelta(seconds=59, microseconds=999_500), 2, "udp", 1.0),
+    ]
+    ev = spark.createDataFrame(
+        rows, f"ts {ts_type}, user_id long, event_type string, value double"
+    )
+    timeout = timeout_by_protocol("event_type", {"udp": 60}, default_s=600)
+    got = sessionize_events(ev, idle_timeout_s=timeout).groupBy("user_id").count()
+    assert {r.user_id: r["count"] for r in got.collect()} == {1: 2, 2: 1}
 
 
 def test_streaming_per_proto_timeouts_match_batch(spark, events_stream_dir):
