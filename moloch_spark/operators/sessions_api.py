@@ -131,7 +131,6 @@ def update_tags_partitioned(
     add: list[str] | None = None,
     remove: list[str] | None = None,
     tags_col: str = "tags",
-    force_manifest: bool = False,
 ) -> DataFrame:
     """Partition-pruned tag write-back on the day-partitioned session
     store (session_store.write_sessions layout — the sessions3-YYMMDD
@@ -141,25 +140,24 @@ def update_tags_partitioned(
     sessions in a 100 TB table may not rewrite 100 TB.
 
       matched ids (+ their lastPacket) -> distinct day partitions
-      -> scan ONLY those partitions (resolved dirs, read nothing else)
-      -> broadcast-merge the id set -> write rewritten days to the
-         committer's staging location -> atomic per-store commit.
+      -> scan ONLY those partitions (the committer's resolved dirs,
+         read nothing else) -> broadcast-merge the id set -> write
+         rewritten days to the committer's staging location -> commit.
 
     Cost is proportional to the days TOUCHED by the matched set —
     tag updates come from time-bounded queries, so that's typically a
     handful of partitions out of years of retention. Untouched
     partitions are never read, never written, never swapped. The
-    commit goes through sources/commit.PartitionCommitter: hardened
-    atomic renames on a local filesystem, the manifest protocol on an
-    object store (pass force_manifest=True to use it anywhere) — see
-    PLANS.md §28. Matched days with no store partition (ids from a
-    wider query than the store's retention) are skipped, per ADVICE r4.
-    Returns the post-update table DataFrame."""
-    from moloch_spark.sources.commit import (
-        PartitionCommitter,
-        read_store,
-        resolve_partitions,
-    )
+    commit goes through the store's sources/commit.PartitionCommitter,
+    which picks the protocol: hardened atomic renames on a plain local
+    store, the manifest protocol on an object store or a store that
+    already has a manifest — see PLANS.md §28. A day a concurrent
+    commit moved since the committer read the store keeps that commit,
+    and an append to a day being rewritten is lost, so tag closed days.
+    Matched days with no store partition (ids from a wider query than
+    the store's retention) are skipped, per ADVICE r4. Returns the
+    post-update table DataFrame."""
+    from moloch_spark.sources.commit import PartitionCommitter, read_store
     from moloch_spark.sources.session_store import PARTITION_COL
 
     # the matched set carries each session's lastPacket (every
@@ -173,61 +171,28 @@ def update_tags_partitioned(
         .distinct()
         .collect()
     )
-    import os
-
-    present = resolve_partitions(path)
-    days = [
-        d for d in matched_days if f"{PARTITION_COL}={d}" in present
+    committer = PartitionCommitter(path, spark=spark)
+    names = [
+        f"{PARTITION_COL}={d}"
+        for d in matched_days
+        if f"{PARTITION_COL}={d}" in committer.parts
     ]
-    if not days:
-        return read_store(spark, path, PARTITION_COL)
-    # plain day dirs: ONE multi-path read with basePath, so Spark plans a
-    # single pruned relation (not N unioned scans) and keeps the `day`
-    # partition column. Manifest-resolved generations live under _gen/
-    # (outside the partition tree), so those read per-dir with the
-    # partition value re-attached.
-    plain = [
-        present[f"{PARTITION_COL}={d}"]
-        for d in days
-        if present[f"{PARTITION_COL}={d}"]
-        == os.path.join(path, f"{PARTITION_COL}={d}")
-    ]
-    touched_parts = []
-    if plain:
-        touched_parts.append(
-            spark.read.option("basePath", path)
-            .parquet(*plain)
-            # partition-type inference may type `day` as DATE; the store
-            # convention (and the manifest branch) is string
-            .withColumn(
-                PARTITION_COL, F.col(PARTITION_COL).cast("string")
-            )
+    if names:
+        updated = update_tags(
+            committer.read(spark, names),
+            matched.select(id_col),
+            id_col=id_col,
+            add=add,
+            remove=remove,
+            tags_col=tags_col,
         )
-    for d in days:
-        pdir = present[f"{PARTITION_COL}={d}"]
-        if pdir not in plain:
-            touched_parts.append(
-                spark.read.parquet(pdir).withColumn(PARTITION_COL, F.lit(d))
-            )
-    touched = touched_parts[0]
-    for p in touched_parts[1:]:
-        touched = touched.unionByName(p, allowMissingColumns=False)
-    updated = update_tags(
-        touched,
-        matched.select(id_col),
-        id_col=id_col,
-        add=add,
-        remove=remove,
-        tags_col=tags_col,
-    )
-    committer = PartitionCommitter(path, force_manifest=force_manifest)
-    (
-        updated.repartition(F.col(PARTITION_COL))
-        .write.mode("overwrite")
-        .partitionBy(PARTITION_COL)
-        .parquet(committer.staging_dir())
-    )
-    committer.commit([f"{PARTITION_COL}={d}" for d in days])
+        (
+            updated.repartition(F.col(PARTITION_COL))
+            .write.mode("overwrite")
+            .partitionBy(PARTITION_COL)
+            .parquet(committer.staging_dir())
+        )
+        committer.commit(names)
     return read_store(spark, path, PARTITION_COL)
 
 

@@ -74,13 +74,6 @@ def get_spark(app_name: str = "moloch_spark", *, cpus: int | None = None) -> Spa
         # daemon importable from any working directory.
         .config("spark.python.daemon.module", "moloch_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-        # Long-running many-query sessions (bench, a Thrift-server-style
-        # deployment) leak broadcast/shuffle state until a DRIVER GC lets
-        # ContextCleaner's weak refs fire; with a 48g heap that can be
-        # never. 60s periodic GC keeps executor memory flat — without it,
-        # queries late in a 100-query sequence see multi-second slowdowns
-        # from accumulated broadcasts.
-        .config("spark.cleaner.periodicGC.interval", "60s")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -46,21 +46,29 @@ Two writers racing on DIFFERENT partitions both survive as long as
 either one's read-back sees the other's PUT; the residual loss window
 is both PUT+read-back sequences completing inside each other's blind
 spot — milliseconds, vs. the whole read→PUT span under plain LWW.
-Writers racing on the SAME partition remain last-writer-wins by
-design (no content merge without a real table-format log / conditional
-PUT — PLANS.md §28). Same-key maintenance rewrites (consolidate,
-layout) pass `expected=` so they never clobber a concurrent UPDATE
-with a stale copy: mismatched entries are skipped and the fresh data
-wins.
+Writers racing on the SAME partition are not merged (no content merge
+without a real table-format log / conditional PUT — PLANS.md §28): a
+PartitionCommitter's rewrite commits with its build-time manifest as
+the `expected=` base, so it never clobbers a concurrent commit with a
+stale copy — moved entries are skipped, the first commit wins, and the
+skipped partition is reported as not landed.
 
-The local fast path keeps the two-rename swap but hardened (ADVICE
-r4): stale `.old` dirs from a prior crash are recovered on entry, a
-failure between the two renames restores the original directory, and
-first-write partitions (no existing dst) commit with a single rename.
-Once ANY partition of a store has been manifest-committed, later
-default-mode committers auto-upgrade to manifest mode — a rename-mode
-swap under a live manifest entry would be invisible to readers (lost
-update, ADVICE r5).
+The store, not the caller, picks the protocol: manifest mode when the
+path is not POSIX or the store already has a (non-empty) manifest,
+the rename swap otherwise — a rename-mode swap under a live manifest
+entry would be invisible to readers (lost update, ADVICE r5), so once
+a store has a manifest every later write goes through it. The local
+swap is the hardened two-rename (ADVICE r4): stale `.old` dirs from a
+prior crash are recovered on entry, a failure between the two renames
+restores the original directory, and first-write partitions (no
+existing dst) commit with a single rename. Appends go through the same
+committer (PartitionCommitter.append) and land in each partition's
+live directory as the store resolves it.
+
+Remaining race: an append and a rewrite of the same partition must not
+overlap — files an append moves into a directory the rewrite has
+already read are dropped when the rewrite lands. Rewrite (compact,
+optimize, tag) closed days only.
 """
 
 from __future__ import annotations
@@ -73,9 +81,7 @@ import threading
 import time
 import uuid
 
-from moloch_spark.sources.fs import get_fs, is_posix_path, strip_scheme
-
-_strip_scheme = strip_scheme  # back-compat alias
+from moloch_spark.sources.fs import get_fs, is_posix_path
 
 MANIFEST = "_manifest.json"
 _VPREFIX = "_manifest.v"
@@ -367,18 +373,17 @@ def commit_manifest_entries(
          PUT+read-back sequences complete inside each other's blind
          spot — milliseconds instead of the whole read→PUT span.
 
-    `expected` (maintenance rewrites: consolidate_store,
-    optimize_layout) maps entry -> the generation the rewrite was BUILT
-    from, with None meaning "resolved from the PLAIN tree — the entry
-    must still be absent at commit time": an entry whose current
-    manifest value no longer matches is dropped from the commit — a
-    concurrent UPDATE landed while we were rewriting stale data, and
-    the update wins (our copy becomes an unreferenced generation for
-    vacuum). Without the None form, a rewrite of a never-committed
-    plain partition would pass unconditionally and clobber an update
-    that manifest-committed that name mid-rewrite. Same-key UPDATE
-    races (two tag write-backs) carry no `expected` and stay
-    last-writer-wins.
+    `expected` (every PartitionCommitter rewrite) maps entry -> the
+    generation the rewrite was BUILT from, with None meaning "resolved
+    from the PLAIN tree — the entry must still be absent at commit
+    time": an entry whose current manifest value no longer matches is
+    dropped from the commit — a concurrent commit landed while we were
+    rewriting stale data, and it wins (our copy becomes an unreferenced
+    generation for vacuum). Without the None form, a rewrite of a
+    never-committed plain partition would pass unconditionally and
+    clobber an update that manifest-committed that name mid-rewrite.
+    Two racing tag write-backs of one day therefore keep the first to
+    commit; the second reports the day as not landed.
 
     Returns the manifest as last read back. Raises RuntimeError when
     `max_attempts` read-backs in a row saw foreign interference (a
@@ -433,8 +438,9 @@ def resolve_partitions(
     `version` resolves through a retained manifest snapshot instead of
     the current one (plain, never-manifest-committed partitions read
     at their current state either way — snapshots version the
-    COMMITTED updates, which after the first manifest commit is every
-    update thanks to the committer's auto-upgrade). `manifest` resolves
+    COMMITTED rewrites, which after the first manifest commit is every
+    rewrite: the committer then always takes manifest mode; appends
+    add files in place and are not versioned). `manifest` resolves
     through a manifest the CALLER already loaded: a maintenance rewrite
     that derives its data dirs and its commit-time `expected=` base
     from two separate reads would clobber a commit landing in between
@@ -478,20 +484,25 @@ def read_exact_partitions(spark, base: str, dirs: list[str]):
             spark.conf.set(key, old)
 
 
-def _grouped_partition_dfs(spark, parts: dict[str, str]) -> list:
-    """One DataFrame per (base dir, partition column) group — the
-    bounded-plan read shared by read_store and consolidate_store. The
-    column key keeps a plain tree that (illegitimately but survivably)
-    mixes partition column names from colliding into one conflicting
+def _read_partitions(spark, parts: dict[str, str]):
+    """`parts` (name -> data dir) as one DataFrame: one relation per
+    (base dir, partition column) group, unioned — the bounded-plan read
+    shared by read_store and PartitionCommitter.read. The column key
+    keeps a plain tree that (illegitimately but survivably) mixes
+    partition column names from colliding into one conflicting
     basePath relation."""
     groups: dict[tuple[str, str], list[str]] = {}
     for name, d in sorted(parts.items()):
         base = d[: -(len(name) + 1)]  # strip "/<name>"
         groups.setdefault((base, name.split("=", 1)[0]), []).append(d)
-    return [
+    dfs = [
         read_exact_partitions(spark, base, dirs)
         for (base, _col), dirs in sorted(groups.items())
     ]
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d)
+    return out
 
 
 def read_store(
@@ -538,61 +549,58 @@ def read_store(
                 else ""
             )
         )
-    dfs = _grouped_partition_dfs(spark, parts)
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    return _read_partitions(spark, parts)
 
 
 class PartitionCommitter:
-    """One atomic replace of a set of partitions in a partitioned store.
+    """The one writer of a partitioned store after it is built: an
+    atomic replace of a set of partitions, or an append.
 
-        c = PartitionCommitter(store)            # or force_manifest=True
+        c = PartitionCommitter(store)
         df.write.partitionBy("day").parquet(c.staging_dir())
-        c.commit(["day=2024-03-05", ...])
+        c.commit(["day=2024-03-05", ...])   # replace: -> names that landed
+        # or c.append()                     # add the staged files
 
-    Rename mode stages OUTSIDE the store tree and swaps each partition
-    with the hardened two-rename; manifest mode stages at the FINAL
-    path under `<store>/_gen/<token>` and commits all partitions with
-    one manifest swap (all-or-nothing across the set, which the rename
-    mode cannot give — one more reason it is the portable default for
-    multi-partition updates on object stores). A store that already has
-    a non-empty manifest forces manifest mode regardless of the flag:
-    mixing a rename-mode swap under a live manifest entry would leave
-    readers on the stale generation (ADVICE r5)."""
+    The store picks the protocol when the committer is built: manifest
+    mode when the path is not POSIX or the store has a non-empty
+    manifest (a rename swap under a live manifest entry would leave
+    readers on the stale generation, ADVICE r5), rename mode otherwise.
+    Both stage under `<store>/_gen/<token>`, invisible to readers.
+    Rename mode swaps each partition with the hardened two-rename;
+    manifest mode commits all partitions with one manifest swap
+    (all-or-nothing across the set, which the rename mode cannot give).
 
-    def __init__(self, store: str, *, force_manifest: bool = False):
-        self._fs, self.store = get_fs(store.rstrip("/"))
-        self.token = uuid.uuid4().hex[:12]
-        self.manifest_mode = (
-            force_manifest
-            or not is_posix_path(store)
-            or bool(load_manifest(store))
+    The manifest is read ONCE, here: `parts` (name -> live data dir)
+    is what `read` scans and what `commit` checks freshness against —
+    two reads would let a commit landing in between slip past the
+    check (review r7)."""
+
+    def __init__(self, store: str, *, token: str | None = None, spark=None):
+        self._fs, self.store = get_fs(store.rstrip("/"), spark)
+        self._spark = spark
+        self.token = token or uuid.uuid4().hex[:12]
+        self.manifest = load_manifest(self.store, spark)
+        self.parts = resolve_partitions(
+            self.store, spark, manifest=self.manifest
         )
-        self._staging = (
-            posixpath.join(self.store, "_gen", self.token)
-            if self.manifest_mode
-            else f"{self.store}__stage_{self.token}"
+        self.manifest_mode = not is_posix_path(self.store) or bool(
+            self.manifest
         )
+        self._staging = posixpath.join(self.store, "_gen", self.token)
 
     def staging_dir(self) -> str:
         return self._staging
 
-    def commit(
-        self, partitions: list[str], *, expected: dict[str, str] | None = None
-    ) -> dict[str, str] | None:
-        """`expected` (maintenance rewrites only) maps partition name ->
-        the generation the staged rewrite was built FROM; entries whose
-        manifest value moved past that base are skipped so a concurrent
-        update is never clobbered with a stale copy — see
-        commit_manifest_entries. Returns the post-commit manifest in
-        manifest mode (callers check which entries actually landed as
-        `_gen/<token>/<name>`), None in rename mode. A non-empty
-        `expected` requires manifest mode (the rename swap has no
-        manifest to check against — and cannot occur from the
-        maintenance callers, whose base is empty exactly when a store
-        has no manifest)."""
+    def read(self, spark, names: list[str]):
+        """The named live partitions as one DataFrame (read_store's
+        grouped reader: partition values stay their dir-name strings)."""
+        return _read_partitions(spark, {n: self.parts[n] for n in names})
+
+    def commit(self, partitions: list[str]) -> list[str]:
+        """Replace `partitions` with their staged rewrite; returns the
+        ones that landed. In manifest mode the expected= base is this
+        committer's manifest read: a partition a concurrent commit moved
+        since then keeps that commit, and is left out of the result."""
         missing = [
             p
             for p in partitions
@@ -608,29 +616,54 @@ class PartitionCommitter:
             # disk for concurrent readers mid-scan on the old manifest
             # and are reclaimed by the explicit vacuum_store call
             # (age-gated MVCC retention — ADVICE r5)
-            return commit_manifest_entries(
+            ours = {
+                p: posixpath.join("_gen", self.token, p) for p in partitions
+            }
+            final = commit_manifest_entries(
                 self.store,
-                {
-                    p: posixpath.join("_gen", self.token, p)
-                    for p in partitions
-                },
-                expected=expected,
+                ours,
+                expected={p: self.manifest.get(p) for p in partitions},
+                spark=self._spark,
             )
-        if expected:
-            raise ValueError(
-                "expected= requires manifest mode: the rename swap has "
-                "no manifest to verify freshness against"
-            )
+            return [p for p in partitions if final.get(p) == ours[p]]
         for p in partitions:
             swap_dir(
                 posixpath.join(self._staging, p),
                 posixpath.join(self.store, p),
             )
         self._fs.delete(self._staging)
-        return None
+        return list(partitions)
 
-    def abort(self) -> None:
-        self._fs.delete(self._staging)
+    def append(self) -> None:
+        """Move the staged files into each partition's live directory as
+        this committer resolved it — the plain dir, or its manifest
+        generation; a new partition gets a plain dir — then remove the
+        staging.
+
+        Each moved file is renamed `<token>-<name>`, and files already
+        carrying the token are dropped from the target dir first: an
+        append re-run under the same token (a replayed stream epoch
+        whose earlier attempt crashed mid-move) replaces that attempt
+        instead of duplicating it, provided it writes the same
+        partitions, as a deterministic replay does. Appends are not
+        versioned: time travel through an older manifest snapshot sees
+        the appended files too."""
+        fs, mark = self._fs, f"{self.token}-"
+        for name in fs.listdir(self._staging):
+            if "=" not in name or name.startswith(("_", ".")):
+                continue
+            src = posixpath.join(self._staging, name)
+            dst = self.parts.get(name) or posixpath.join(self.store, name)
+            fs.mkdirs(dst)
+            for f in fs.listdir(dst):
+                if f.startswith(mark):
+                    fs.delete(posixpath.join(dst, f))
+            for f in fs.listdir(src):
+                if not f.startswith(("_", ".")):
+                    fs.rename(
+                        posixpath.join(src, f), posixpath.join(dst, mark + f)
+                    )
+        fs.delete(self._staging)
 
 
 def swap_dir(src: str, dst: str) -> None:
@@ -832,42 +865,26 @@ def consolidate_store(spark, store: str) -> list[str]:
     consolidated partition names."""
     from pyspark.sql import functions as F
 
-    manifest = load_manifest(store, spark)
-    tokens = {rel.split("/")[1] for rel in manifest.values()}
+    c = PartitionCommitter(store, spark=spark)
+    tokens = {rel.split("/")[1] for rel in c.manifest.values()}
     if len(tokens) <= 1:
         return []
-    _, root = get_fs(store, spark)
-    cols = {name.split("=", 1)[0] for name in manifest}
+    cols = {name.split("=", 1)[0] for name in c.manifest}
     if len(cols) != 1:
         raise ValueError(
             f"store {store!r} manifest mixes partition columns {sorted(cols)}"
         )
     (col,) = cols
-    dfs = _grouped_partition_dfs(
-        spark,
-        {name: posixpath.join(root, rel) for name, rel in manifest.items()},
-    )
-    df = dfs[0]
-    for d in dfs[1:]:
-        df = df.unionByName(d)
-    c = PartitionCommitter(store, force_manifest=True)
+    parts = sorted(c.manifest)
     (
-        df.repartition(F.col(col))
+        c.read(spark, parts)
+        .repartition(F.col(col))
         .write.partitionBy(col)
         .parquet(c.staging_dir())
     )
-    parts = sorted(manifest)
-    # expected = the generations this rewrite was built from: a
-    # partition a concurrent update moved past that base keeps the
-    # UPDATE (our stale copy becomes an unreferenced gen for vacuum)
-    final = c.commit(parts, expected=manifest)
-    # report only what actually consolidated — a skipped entry still
-    # lives in its own (newer) generation token
-    return [
-        p
-        for p in parts
-        if final.get(p) == posixpath.join("_gen", c.token, p)
-    ]
+    # report only what actually consolidated — a partition a concurrent
+    # update moved past the committer's base keeps the update
+    return c.commit(parts)
 
 
 # ---------------------------------------------------------------------------

@@ -12,12 +12,18 @@ Spark shape: a parquet (Delta-ready) table partitioned by
 `day` reaches the scan as PartitionFilters. Retention = partition drop.
 The bounding-mode widening rule becomes derivation of the `day`
 predicate from the right timestamp column(s).
+
+One write path: once built (`write_sessions(mode="overwrite")`), the
+store is written only through sources/commit.PartitionCommitter —
+appends (write_sessions, the capture sink) and rewrites (tag
+write-back, compaction, z-order layout) alike — and the store, not the
+caller, picks the commit protocol. An append and a rewrite of the same
+day must not overlap: rewrite closed days only.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,14 +45,38 @@ def write_sessions(
     whole day-partitions: without it every task opens a writer for every
     day it sees (tasks x days small files — a metastore killer at 100 TB).
     AQE splits skewed days back across tasks when one day dominates.
+
+    `mode="append"` goes through the store's committer
+    (sources/commit.PartitionCommitter.append): the files are staged
+    under `_gen/<token>` and moved into each day's live directory as
+    the store resolves it, so an append to a store with a manifest is
+    visible to read_sessions. Any other mode is one plain Spark write
+    of the whole store (`"overwrite"` builds it afresh).
     """
-    (
-        sessions.withColumn(PARTITION_COL, F.date_format(F.col(ts_col), "yyyy-MM-dd"))
-        .repartition(F.col(PARTITION_COL))
-        .write.mode(mode)
-        .partitionBy(PARTITION_COL)
-        .parquet(path)
-    )
+    if mode == "append":
+        _append(sessions, path, ts_col)
+        return
+    _by_day(sessions, ts_col).write.mode(mode).partitionBy(
+        PARTITION_COL
+    ).parquet(path)
+
+
+def _by_day(sessions: DataFrame, ts_col: str) -> DataFrame:
+    return sessions.withColumn(
+        PARTITION_COL, F.date_format(F.col(ts_col), "yyyy-MM-dd")
+    ).repartition(F.col(PARTITION_COL))
+
+
+def _append(
+    sessions: DataFrame, path: str, ts_col: str, token: str | None = None
+) -> None:
+    from moloch_spark.sources.commit import PartitionCommitter
+
+    c = PartitionCommitter(path, token=token, spark=sessions.sparkSession)
+    _by_day(sessions, ts_col).write.mode("overwrite").partitionBy(
+        PARTITION_COL
+    ).parquet(c.staging_dir())
+    c.append()
 
 
 def write_sessions_stream(
@@ -58,10 +88,32 @@ def write_sessions_stream(
 ):
     """Streaming sink: the ES-bulk analog is a partitioned append via
     foreachBatch (capture buffers dbBulkSize per thread; Spark buffers
-    per micro-batch)."""
+    per micro-batch), exactly once.
+
+    foreachBatch is at-least-once: a driver that dies after the sink
+    write but before the checkpoint commit re-delivers the epoch on
+    restart. Each epoch is appended through the committer under a token
+    named after the checkpoint and the epoch, then recorded in the
+    epoch ledger inside the checkpoint (streaming/ledger.py). A replayed
+    epoch the ledger already holds runs but writes nothing; one that
+    crashed between its file moves and the ledger record runs again,
+    and its append first drops the files the earlier attempt moved
+    (they carry the same token)."""
+    import hashlib
+
+    from moloch_spark.streaming.ledger import committed_epoch, record_epoch
+
+    stream = hashlib.sha1(checkpoint.encode()).hexdigest()[:8]
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        write_sessions(batch, path, ts_col=ts_col, mode="append")
+        spark = batch.sparkSession
+        if epoch_id <= committed_epoch(checkpoint, "session_store", spark):
+            # run the batch anyway, discarding its rows: a stateful
+            # query's state store commits happen inside that job
+            batch.write.format("noop").mode("overwrite").save()
+            return
+        _append(batch, path, ts_col, token=f"{stream}e{epoch_id}")
+        record_epoch(checkpoint, "session_store", epoch_id, spark)
 
     return (
         sessions.writeStream.foreachBatch(write_batch)
@@ -284,17 +336,16 @@ def optimize_layout(
     days: list[str] | None = None,
     bits: int = 12,
     n_files: int = 16,
-    force_manifest: bool = True,
 ) -> list[str]:
     """Maintenance: rewrite day partitions Z-ORDERED by `cols` and
-    commit them atomically through the PartitionCommitter (VERDICT r6
-    #4 — layout.write_zordered was an island with no store path).
-    Defaults to MANIFEST mode even on a local store: the reader-
-    isolation and all-days-or-nothing guarantees below come from the
-    single manifest swap — rename mode deletes each superseded
-    partition at its own swap, so a concurrent reader mid-scan would
-    hit removed files (pass force_manifest=False only for an offline
-    local rewrite with no readers).
+    commit them through the store's PartitionCommitter (VERDICT r6
+    #4 — layout.write_zordered was an island with no store path), like
+    compaction: on a store with a manifest (any object store after its
+    first rewrite) all days land with one manifest swap and a reader
+    mid-scan finishes on the superseded generation (MVCC retention,
+    reclaim via vacuum_store); on a plain local store the days swap one
+    by one with the hardened rename, and the superseded files are
+    deleted at each swap.
 
     The reference prunes scans by TIME only (index-name ranges,
     viewer/db.js:1853-1939); its hottest non-time predicates —
@@ -303,70 +354,35 @@ def optimize_layout(
     min-max pruning on ANY prefix subset of `cols` (SURVEY §4's
     optional ip-range row-group skipping), at the cost of one sorted
     rewrite per day — run it where compact_partitions runs, on CLOSED
-    days only. Readers are never disturbed: the rewrite stages under
-    the committer's generation and lands with one manifest swap; a
-    concurrent reader mid-scan finishes on the superseded generation
-    (MVCC retention, reclaim via vacuum_store).
+    days only (an append to a day being rewritten is lost).
 
     Scale shape: one driver loop over day partitions (bounded by the
     retention window, the same cadence compaction runs at), each
     iteration two Spark jobs (min/max stats + range-partitioned sorted
     write) — write_zordered's documented cost. Returns the committed
-    partition names."""
+    partition names (a day a concurrent commit moved is left out)."""
     import posixpath
 
-    from moloch_spark.sources.commit import (
-        PartitionCommitter,
-        load_manifest,
-        resolve_partitions,
-    )
+    from moloch_spark.sources.commit import PartitionCommitter
     from moloch_spark.sources.layout import write_zordered
 
-    # ONE manifest read feeds both the data dirs the rewrite scans and
-    # the commit-time expected= base — two reads would let a commit
-    # landing in between slip past the freshness check (review r7)
-    base = load_manifest(path)
-    parts = resolve_partitions(path, manifest=base)
+    committer = PartitionCommitter(path, spark=spark)
     if days is None:
-        days = sorted(name.rsplit("=", 1)[1] for name in parts)
-    committer = PartitionCommitter(path, force_manifest=force_manifest)
-    done: list[str] = []
-    for day in days:
-        name = f"{PARTITION_COL}={day}"
-        pdir = parts.get(name)
-        if pdir is None:
-            continue
+        days = sorted(name.rsplit("=", 1)[1] for name in committer.parts)
+    names = [
+        f"{PARTITION_COL}={d}"
+        for d in days
+        if f"{PARTITION_COL}={d}" in committer.parts
+    ]
+    for name in names:
         write_zordered(
-            spark.read.parquet(pdir),
+            committer.read(spark, [name]).drop(PARTITION_COL),
             posixpath.join(committer.staging_dir(), name),
             cols,
             bits=bits,
             n_files=n_files,
         )
-        done.append(name)
-    if done:
-        # expected = the generations this rewrite read from (None for
-        # a day resolved from the PLAIN tree: it must still be
-        # uncommitted at commit time): a day a concurrent UPDATE moved
-        # past that base keeps the update (our re-clustered copy of
-        # stale data is dropped; re-run later)
-        final = committer.commit(
-            done,
-            expected=(
-                {n: base.get(n) for n in done}
-                if committer.manifest_mode
-                else None  # offline local rewrite: no manifest to check
-            ),
-        )
-        if final is not None:
-            done = [
-                n
-                for n in done
-                if final.get(n) == posixpath.join("_gen", committer.token, n)
-            ]
-    else:
-        committer.abort()
-    return done
+    return committer.commit(names) if names else []
 
 
 def compact_partitions(
@@ -375,7 +391,6 @@ def compact_partitions(
     *,
     target_file_bytes: int = 128 * 1024 * 1024,
     days: list[str] | None = None,
-    force_manifest: bool = False,
     zorder_cols: list[str] | None = None,
     zorder_bits: int = 12,
 ) -> dict[str, int]:
@@ -383,15 +398,15 @@ def compact_partitions(
     appends and per-day writes accumulate small files; scans then pay
     per-file open/footer costs (the metastore killer at 100 TB). Each
     day partition is rewritten into ceil(bytes/target) files and
-    committed through sources/commit.PartitionCommitter — hardened
-    atomic renames locally, the manifest protocol on an object store
-    (force_manifest=True anywhere; see PLANS.md §28) — so readers
-    never observe a partially-rewritten partition. On a real
-    deployment the same job runs per closed day (only CLOSED days:
-    compaction of the live day races the writer). File stats go through
-    the sources/fs adapter — a glob/getsize probe would silently find
-    ZERO files on an s3a:// store and no-op the exact deployments
-    compaction exists for (VERDICT r6 #3).
+    committed through the store's sources/commit.PartitionCommitter —
+    hardened atomic renames on a plain local store, the manifest
+    protocol on an object store or a store that already has a manifest
+    (see PLANS.md §28) — so readers never observe a partially-rewritten
+    partition. On a real deployment the same job runs per closed day
+    (only CLOSED days: an append to a day being compacted is lost).
+    File stats go through the sources/fs adapter — a glob/getsize probe
+    would silently find ZERO files on an s3a:// store and no-op the
+    exact deployments compaction exists for (VERDICT r6 #3).
 
     `zorder_cols` clusters each rewritten partition by the Morton key
     of those columns in the SAME rewrite (Delta's `OPTIMIZE ... ZORDER
@@ -400,15 +415,12 @@ def compact_partitions(
     the compaction pays one. Compaction TRIGGER semantics are unchanged
     (a day already at its target file count is skipped) — use
     optimize_layout to re-cluster without the small-files condition.
-    Returns {day: files_after}."""
+    Returns {day: files_after}; a day a concurrent commit moved
+    mid-compaction keeps that commit and is left out."""
     import math
     import posixpath
 
-    from moloch_spark.sources.commit import (
-        PartitionCommitter,
-        load_manifest,
-        resolve_partitions,
-    )
+    from moloch_spark.sources.commit import PartitionCommitter
     from moloch_spark.sources.fs import get_fs
 
     fs, _root = get_fs(path, spark)
@@ -420,17 +432,14 @@ def compact_partitions(
             if n.endswith(".parquet")
         ]
 
-    # one manifest read feeds both the scanned dirs and the expected=
-    # base (see optimize_layout)
-    base = load_manifest(path)
-    parts = resolve_partitions(path, manifest=base)
+    committer = PartitionCommitter(path, spark=spark)
     if days is None:
-        days = sorted(name.rsplit("=", 1)[1] for name in parts)
+        days = sorted(name.rsplit("=", 1)[1] for name in committer.parts)
     out: dict[str, int] = {}
-    committer = PartitionCommitter(path, force_manifest=force_manifest)
-    compacted: list[str] = []
+    staged: dict[str, int] = {}
     for day in days:
-        pdir = parts.get(f"{PARTITION_COL}={day}")
+        name = f"{PARTITION_COL}={day}"
+        pdir = committer.parts.get(name)
         if pdir is None:
             continue
         files = _parquet_files(pdir)
@@ -439,48 +448,16 @@ def compact_partitions(
         if len(files) <= n:
             out[day] = len(files)
             continue
-        dst = posixpath.join(
-            committer.staging_dir(), f"{PARTITION_COL}={day}"
-        )
+        dst = posixpath.join(committer.staging_dir(), name)
+        df = committer.read(spark, [name]).drop(PARTITION_COL)
         if zorder_cols:
             from moloch_spark.sources.layout import write_zordered
 
-            write_zordered(
-                spark.read.parquet(pdir),
-                dst,
-                zorder_cols,
-                bits=zorder_bits,
-                n_files=n,
-            )
+            write_zordered(df, dst, zorder_cols, bits=zorder_bits, n_files=n)
         else:
-            spark.read.parquet(pdir).repartition(n).write.mode(
-                "overwrite"
-            ).parquet(dst)
-        compacted.append(day)
-    if compacted:
-        names = [f"{PARTITION_COL}={d}" for d in compacted]
-        # expected: never clobber a concurrent update with the
-        # compaction of its superseded generation; None = the day was
-        # plain at read time and must still be uncommitted (see
-        # optimize_layout)
-        final = committer.commit(
-            names,
-            expected=(
-                {n: base.get(n) for n in names}
-                if committer.manifest_mode
-                else None  # offline local rewrite: no manifest to check
-            ),
-        )
-        parts = resolve_partitions(path)
-        for day in compacted:
-            name = f"{PARTITION_COL}={day}"
-            ours = posixpath.join("_gen", committer.token, name)
-            if (final is None or final.get(name) == ours) and name in parts:
-                out[day] = len(_parquet_files(parts[name]))
-            # else: the day moved (concurrent update) or vanished
-            # (concurrent expiry) mid-compaction — OUR rewrite was
-            # dropped by the expected check, so it was NOT compacted;
-            # leave it out of the result and let the next run see it
-    else:
-        committer.abort()
+            df.repartition(n).write.mode("overwrite").parquet(dst)
+        staged[name] = len(_parquet_files(dst))
+    if staged:
+        for name in committer.commit(list(staged)):
+            out[name.split("=", 1)[1]] = staged[name]
     return out

@@ -60,14 +60,16 @@ def _store_rows(spark, path):
     }
 
 
-def test_manifest_crash_between_write_and_commit(spark, tmp_path):
+def test_manifest_crash_between_write_and_commit(
+    spark, tmp_path, manifest_protocol
+):
     """Staged generation written, writer dies before the manifest swap:
     readers keep seeing the old data; vacuum removes the orphan."""
     path = str(tmp_path / "store")
     _mk_store(spark, path)
     before = _store_rows(spark, path)
 
-    c = PartitionCommitter(path, force_manifest=True)
+    c = PartitionCommitter(path)
     src = read_store(spark, path, "day").filter(F.col("day") == "2024-03-02")
     (
         src.withColumn("tags", F.array(F.lit("CRASHED")))
@@ -91,7 +93,9 @@ def test_manifest_crash_between_write_and_commit(spark, tmp_path):
     assert _store_rows(spark, path) == before
 
 
-def test_vacuum_zero_retention_survives_inflight_commit(spark, tmp_path):
+def test_vacuum_zero_retention_survives_inflight_commit(
+    spark, tmp_path, manifest_protocol
+):
     """VERDICT r7 Wrong #1 closed: a maintenance vacuum_store(retain_s=0)
     firing between a committer's staging write and its commit() must
     not delete the staging dir out from under it — never-referenced
@@ -99,7 +103,7 @@ def test_vacuum_zero_retention_survives_inflight_commit(spark, tmp_path):
     racing commit completes and serves."""
     path = str(tmp_path / "store")
     _mk_store(spark, path)
-    c = PartitionCommitter(path, force_manifest=True)
+    c = PartitionCommitter(path)
     src = read_store(spark, path, "day").filter(F.col("day") == "2024-03-02")
     (
         src.withColumn("tags", F.array(F.lit("RACED")))
@@ -114,7 +118,7 @@ def test_vacuum_zero_retention_survives_inflight_commit(spark, tmp_path):
 
 
 def _tag_day2(spark, path, tag):
-    c = PartitionCommitter(path, force_manifest=True)
+    c = PartitionCommitter(path)
     src = read_store(spark, path, "day").filter(F.col("day") == "2024-03-02")
     (
         src.withColumn("tags", F.array(F.lit(tag)))
@@ -126,7 +130,9 @@ def _tag_day2(spark, path, tag):
     return c.token
 
 
-def test_manifest_commit_supersedes_with_mvcc_retention(spark, tmp_path):
+def test_manifest_commit_supersedes_with_mvcc_retention(
+    spark, tmp_path, manifest_protocol
+):
     """Two successive manifest commits of the same partition: readers
     always see exactly one generation, the superseded one survives the
     commit (a concurrent reader that resolved the old manifest finishes
@@ -178,17 +184,23 @@ def test_manifest_commit_supersedes_with_mvcc_retention(spark, tmp_path):
     assert len(got) == 9
 
 
-def test_rename_mode_auto_upgrades_under_manifest(spark, tmp_path):
+def test_rename_mode_auto_upgrades_under_manifest(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r5 (medium): once any partition is manifest-committed, a
-    later DEFAULT-mode committer must go through the manifest too — a
-    plain-dir swap would be invisible behind the stale manifest entry
-    (lost update)."""
+    later committer on the same LOCAL path must go through the manifest
+    too — a plain-dir swap would be invisible behind the stale manifest
+    entry (lost update)."""
+    import moloch_spark.sources.commit as commit_mod
+
     path = str(tmp_path / "store")
     _mk_store(spark, path)
-    _tag_day2(spark, path, "gen1")
+    with monkeypatch.context() as m:
+        m.setattr(commit_mod, "is_posix_path", lambda p: False)
+        _tag_day2(spark, path, "gen1")
 
-    c = PartitionCommitter(path)                       # no force_manifest
-    assert c.manifest_mode                             # auto-upgraded
+    c = PartitionCommitter(path)
+    assert c.manifest_mode                             # the manifest decides
     src = read_store(spark, path, "day").filter(F.col("day") == "2024-03-02")
     (
         src.withColumn("tags", F.array(F.lit("gen2")))
@@ -200,7 +212,9 @@ def test_rename_mode_auto_upgrades_under_manifest(spark, tmp_path):
     assert _store_rows(spark, path)["s1-0"] == ["gen2"]   # update visible
 
 
-def test_read_store_no_resolvable_partition_raises(spark, tmp_path):
+def test_read_store_no_resolvable_partition_raises(
+    spark, tmp_path, manifest_protocol
+):
     """ADVICE r5 (low): a manifest-bearing store where nothing survives
     the partition_col filter must fail with a descriptive error, not an
     IndexError."""
@@ -213,7 +227,9 @@ def test_read_store_no_resolvable_partition_raises(spark, tmp_path):
         read_store(spark, path, "not_a_partition_col")
 
 
-def test_read_store_plan_bounded_by_generations(spark, tmp_path):
+def test_read_store_plan_bounded_by_generations(
+    spark, tmp_path, manifest_protocol
+):
     """VERDICT r5 #3: manifest-mode read plans one multi-path relation
     per BASE (plain tree + one per generation token), not one union
     branch per partition — 40 day-partitions with 2 manifest-committed
@@ -233,7 +249,7 @@ def test_read_store_plan_bounded_by_generations(spark, tmp_path):
     )
     write_sessions(df, path, mode="overwrite")
     _tag_day2(spark, path, "gen1")                     # token A: day 2
-    c = PartitionCommitter(path, force_manifest=True)  # token B: day 3
+    c = PartitionCommitter(path)  # token B: day 3
     src = read_store(spark, path, "day").filter(F.col("day") == "2024-03-03")
     (
         src.withColumn("tags", F.array(F.lit("genB")))
@@ -253,7 +269,9 @@ def test_read_store_plan_bounded_by_generations(spark, tmp_path):
     assert got["s0-0"] == ["old"]
 
 
-def test_update_tags_partitioned_manifest_mode(spark, tmp_path):
+def test_update_tags_partitioned_manifest_mode(
+    spark, tmp_path, manifest_protocol
+):
     """The real operator through the portable protocol end-to-end,
     including ADVICE r4: matched days absent from the store are skipped
     instead of raising."""
@@ -269,7 +287,6 @@ def test_update_tags_partitioned_manifest_mode(spark, tmp_path):
     )
     out = update_tags_partitioned(
         spark, path, matched, add=["flagged"], remove=["old"],
-        force_manifest=True,
     )
     got = {r.session_id: sorted(r.tags) for r in out.collect()}
     assert len(got) == 9                               # ghost day skipped
@@ -290,7 +307,7 @@ def test_update_tags_partitioned_skips_absent_day_rename_mode(spark, tmp_path):
     assert out.count() == 9                            # store unchanged
 
 
-def test_compact_partitions_manifest_mode(spark, tmp_path):
+def test_compact_partitions_manifest_mode(spark, tmp_path, manifest_protocol):
     from moloch_spark.sources.session_store import (
         compact_partitions,
         write_sessions,
@@ -304,24 +321,26 @@ def test_compact_partitions_manifest_mode(spark, tmp_path):
         )
         write_sessions(df, path, mode="append")
     res = compact_partitions(
-        spark, path, target_file_bytes=1 << 40, force_manifest=True
+        spark, path, target_file_bytes=1 << 40
     )
     assert res == {"2024-03-05": 1}
     assert read_store(spark, path, "day").count() == 1000
     # idempotent second run sees the manifest-resolved (compacted) dir
     assert compact_partitions(
-        spark, path, target_file_bytes=1 << 40, force_manifest=True
+        spark, path, target_file_bytes=1 << 40
     ) == {"2024-03-05": 1}
 
 
-def test_vacuum_reclaims_partition_inside_live_token(spark, tmp_path):
+def test_vacuum_reclaims_partition_inside_live_token(
+    spark, tmp_path, manifest_protocol
+):
     """A multi-partition commit leaves one token holding several days;
     when a later commit supersedes only ONE of them, vacuum must
     reclaim that partition dir inside the still-live token instead of
     leaking it forever (token-granular liveness bug)."""
     path = str(tmp_path / "store")
     _mk_store(spark, path)
-    c1 = PartitionCommitter(path, force_manifest=True)
+    c1 = PartitionCommitter(path)
     src = read_store(spark, path, "day").filter(
         F.col("day").isin("2024-03-01", "2024-03-02")
     )
@@ -341,7 +360,9 @@ def test_vacuum_reclaims_partition_inside_live_token(spark, tmp_path):
     assert len(got) == 9
 
 
-def test_vacuum_orphan_newest_snapshot_reclaimed(spark, tmp_path):
+def test_vacuum_orphan_newest_snapshot_reclaimed(
+    spark, tmp_path, manifest_protocol
+):
     """A crash between the snapshot PUT and the manifest PUT leaves the
     NEWEST snapshot not matching the current manifest. While young it
     must be PROTECTED at any retain_s — an in-flight commit looks
@@ -378,7 +399,9 @@ def test_vacuum_orphan_newest_snapshot_reclaimed(spark, tmp_path):
     assert os.path.isdir(os.path.join(path, "_gen", t1))
 
 
-def test_vacuum_gates_on_supersession_time_not_creation(spark, tmp_path):
+def test_vacuum_gates_on_supersession_time_not_creation(
+    spark, tmp_path, manifest_protocol
+):
     """The review scenario: gen1 served as current for 'hours' (old
     mtimes), then gen2 supersedes it JUST NOW. retain_s=3600 must keep
     gen1 — a reader that resolved the old manifest a second before the
@@ -406,7 +429,9 @@ def test_vacuum_gates_on_supersession_time_not_creation(spark, tmp_path):
     assert _store_rows(spark, path)["s1-0"] == ["gen2"]
 
 
-def test_read_store_preserves_exact_partition_values(spark, tmp_path):
+def test_read_store_preserves_exact_partition_values(
+    spark, tmp_path, manifest_protocol
+):
     """Partition-type inference must not rewrite values: node=007 stays
     '007' through read_store AND through a consolidate rewrite (which
     must reproduce the exact dir names it commits)."""
@@ -417,7 +442,7 @@ def test_read_store_preserves_exact_partition_values(spark, tmp_path):
         [("a", "007"), ("b", "007"), ("c", "112")], "id string, node string"
     )
     for node in ("007", "112"):
-        c = PartitionCommitter(path, force_manifest=True)
+        c = PartitionCommitter(path)
         (
             df.filter(F.col("node") == node)
             .repartition(1)
@@ -432,7 +457,9 @@ def test_read_store_preserves_exact_partition_values(spark, tmp_path):
     assert sorted(r.node for r in got2.collect()) == ["007", "007", "112"]
 
 
-def test_consolidate_store_collapses_generation_sprawl(spark, tmp_path):
+def test_consolidate_store_collapses_generation_sprawl(
+    spark, tmp_path, manifest_protocol
+):
     """A year of daily single-partition commits would grow read_store's
     plan back to one scan group per token; consolidate_store rewrites
     all manifest partitions under ONE token and restores the bounded
@@ -444,7 +471,7 @@ def test_consolidate_store_collapses_generation_sprawl(spark, tmp_path):
     # three separate commits -> three generation tokens
     for day, tag in (("2024-03-01", "g1"), ("2024-03-02", "g2"),
                      ("2024-03-03", "g3")):
-        c = PartitionCommitter(path, force_manifest=True)
+        c = PartitionCommitter(path)
         src = read_store(spark, path, "day").filter(F.col("day") == day)
         (
             src.withColumn("tags", F.array(F.lit(tag)))
@@ -652,7 +679,9 @@ def test_vacuum_hot_store_reclaims_behind_horizon(tmp_path):
     assert set(manifest_versions(path)) >= {n - 3, n - 2, n - 1, n}
 
 
-def test_snapshot_version_claim_collision_keeps_both(tmp_path, spark):
+def test_snapshot_version_claim_collision_keeps_both(
+    tmp_path, spark, manifest_protocol
+):
     """ADVICE r6: two committers that both computed v = last+1 write
     DIFFERENT (writer-unique) snapshot keys instead of overwriting one
     another; version listing dedupes, time travel to the collided

@@ -177,14 +177,15 @@ def test_cron_forward_outbox_over_hadoopfs(
 
 
 def test_update_tags_auto_upgrade_end_to_end(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """ADVICE r5 medium through the real operator: a manifest-mode tag
-    update followed by a DEFAULT-mode one on the same store — the
-    second update must be visible (the committer auto-upgrades instead
-    of swapping plain dirs behind the manifest)."""
+    update followed by one on the same LOCAL path — the second update
+    must be visible (the store's manifest picks manifest mode instead
+    of swapping plain dirs behind it)."""
     import datetime as dtm
 
+    import moloch_spark.sources.commit as commit_mod
     from moloch_spark.operators.sessions_api import update_tags_partitioned
     from moloch_spark.sources.session_store import write_sessions
 
@@ -197,9 +198,9 @@ def test_update_tags_auto_upgrade_end_to_end(
     )
     write_sessions(sess, path, mode="overwrite")
     matched = sess.filter("session_id = 's1'")
-    update_tags_partitioned(
-        spark, path, matched, add=["first"], force_manifest=True
-    )
+    with monkeypatch.context() as m:
+        m.setattr(commit_mod, "is_posix_path", lambda p: False)
+        update_tags_partitioned(spark, path, matched, add=["first"])
     out = update_tags_partitioned(spark, path, matched, add=["second"])
     got = {r.session_id: sorted(r.tags) for r in out.collect()}
     assert got["s1"] == sorted(["first", "old", "second"])
@@ -220,3 +221,51 @@ def test_publish_once_over_hadoopfs(spark, tmp_path, nonposix_file_scheme):
     meta2 = publish_once(spark.range(99).select(F.col("id")), dest, {"hi": "t9"})
     assert meta2 == meta
     assert spark.read.parquet(resolve_commit(dest, spark)[0]).count() == 5
+
+
+def test_append_after_manifest_compaction_is_read(
+    spark, tmp_path, nonposix_file_scheme
+):
+    """An object store has a manifest after its first compaction; an
+    append must land where readers resolve the day — through
+    write_sessions and through the capture sink alike — instead of in a
+    plain day dir the manifest hides."""
+    from moloch_spark.sources.commit import load_manifest
+    from moloch_spark.sources.session_store import (
+        compact_partitions,
+        read_sessions,
+        write_sessions,
+        write_sessions_stream,
+    )
+
+    store = f"file://{tmp_path}/store"
+    schema = "session_id string, last_packet timestamp"
+
+    def rows(lo, n):
+        return [
+            (f"s{i}", dt.datetime(2024, 3, 5, 12, i % 60))
+            for i in range(lo, lo + n)
+        ]
+
+    for lo in (0, 10):  # two files in the day, so compaction rewrites it
+        write_sessions(spark.createDataFrame(rows(lo, 10), schema), store)
+    assert compact_partitions(spark, store) == {"2024-03-05": 1}
+    assert "day=2024-03-05" in load_manifest(store)
+
+    write_sessions(spark.createDataFrame(rows(20, 10), schema), store)
+    assert read_sessions(spark, store).count() == 30
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows(30, 10), schema).write.parquet(src)
+    q = (
+        write_sessions_stream(
+            spark.readStream.schema(schema).parquet(src),
+            store,
+            str(tmp_path / "ckpt"),
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(r.session_id for r in read_sessions(spark, store).collect())
+    assert got == sorted(f"s{i}" for i in range(40))

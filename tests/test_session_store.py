@@ -88,7 +88,9 @@ def test_retention(spark, store, tmp_path):
     assert all(p.split("=")[1] >= "2024-01-15" for p in remaining)
 
 
-def test_retention_defers_manifest_data_to_vacuum(spark, tmp_path):
+def test_retention_defers_manifest_data_to_vacuum(
+    spark, tmp_path, manifest_protocol
+):
     """Expiring a MANIFEST-committed partition drops only its manifest
     entry; with vacuum_retain_s set, the generation data survives the
     expiry, so a reader that resolved the pre-expiry manifest (or a
@@ -113,7 +115,7 @@ def test_retention_defers_manifest_data_to_vacuum(spark, tmp_path):
         rows, "session_id string, last_packet timestamp, tags array<string>"
     )
     write_sessions(df, path, mode="overwrite")
-    c = PartitionCommitter(path, force_manifest=True)
+    c = PartitionCommitter(path)
     src = read_store(spark, path, "day").filter(F.col("day") == "2024-01-10")
     (
         src.withColumn("tags", F.array(F.lit("M")))
@@ -315,7 +317,9 @@ def test_update_tags_bucketed_no_shuffle_roundtrip(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_tags_bk__staged")
 
 
-def test_expire_defers_partition_needed_by_presnapshot(spark, tmp_path):
+def test_expire_defers_partition_needed_by_presnapshot(
+    spark, tmp_path, manifest_protocol
+):
     """ADVICE r6: a retained snapshot written BEFORE a partition's first
     manifest commit resolves that partition to its PLAIN dir. Expiring
     the partition then must neither delete the plain dir (breaks
@@ -345,7 +349,7 @@ def test_expire_defers_partition_needed_by_presnapshot(spark, tmp_path):
     write_sessions(df, path, mode="overwrite")
 
     def _commit(day, tag):
-        c = PartitionCommitter(path, force_manifest=True)
+        c = PartitionCommitter(path)
         src = read_store(spark, path, "day").filter(F.col("day") == day)
         (
             src.withColumn("tags", F.array(F.lit(tag)))
@@ -403,7 +407,9 @@ def test_expire_defers_partition_needed_by_presnapshot(spark, tmp_path):
     assert left == {"2024-01-11"}
 
 
-def test_time_travel_to_empty_snapshot_serves_plain_tree(spark, tmp_path):
+def test_time_travel_to_empty_snapshot_serves_plain_tree(
+    spark, tmp_path, manifest_protocol
+):
     """ADVICE r6: an EMPTY manifest snapshot is a legitimate committed
     state (expire_partitions popping every entry writes one) — time
     travel to it serves the plain tree like the current-state read,
@@ -426,7 +432,7 @@ def test_time_travel_to_empty_snapshot_serves_plain_tree(spark, tmp_path):
         rows, "session_id string, last_packet timestamp, tags array<string>"
     )
     write_sessions(df, path, mode="overwrite")
-    c = PartitionCommitter(path, force_manifest=True)
+    c = PartitionCommitter(path)
     src = read_store(spark, path, "day").filter(F.col("day") == "2024-01-10")
     (
         src.withColumn("tags", F.array(F.lit("M")))
@@ -491,7 +497,9 @@ def test_compact_file_stats_through_fs_adapter(spark, tmp_path, monkeypatch):
     assert calls["size"] >= 4          # every pre-compaction file sized
 
 
-def test_optimize_layout_zorders_store_partitions(spark, tmp_path):
+def test_optimize_layout_zorders_store_partitions(
+    spark, tmp_path, manifest_protocol
+):
     """VERDICT r6 #4: z-order wired INTO the store. optimize_layout
     rewrites day partitions through the commit protocol; per-file
     min/max envelopes on the clustered value columns narrow (the
@@ -520,7 +528,7 @@ def test_optimize_layout_zorders_store_partitions(spark, tmp_path):
     )
 
     done = optimize_layout(
-        spark, path, ["user_id", "packets"], n_files=8, force_manifest=True
+        spark, path, ["user_id", "packets"], n_files=8
     )
     assert done == ["day=2024-01-10", "day=2024-01-11"]
     assert set(load_manifest(path)) == set(done)
@@ -564,7 +572,9 @@ def test_optimize_layout_zorders_store_partitions(spark, tmp_path):
     assert os.path.isdir(os.path.join(path, "day=2024-01-10"))
 
 
-def test_compact_with_zorder_clusters_in_one_rewrite(spark, tmp_path):
+def test_compact_with_zorder_clusters_in_one_rewrite(
+    spark, tmp_path, manifest_protocol
+):
     """compact_partitions(zorder_cols=...) folds the layout job into
     the compaction rewrite (OPTIMIZE ZORDER BY shape): small files
     collapse AND the surviving files' min/max envelopes narrow on the
@@ -596,7 +606,6 @@ def test_compact_with_zorder_clusters_in_one_rewrite(spark, tmp_path):
         path,
         target_file_bytes=max(1, total // 4),
         zorder_cols=["user_id", "packets"],
-        force_manifest=True,
     )
     day = "2024-03-05"
     assert 4 <= res[day] < 8          # compacted AND multi-file
@@ -616,7 +625,7 @@ def test_compact_with_zorder_clusters_in_one_rewrite(spark, tmp_path):
     assert sum(r["pw"] for r in stats) / len(stats) < 210      # of 256
 
 
-def test_read_sessions_time_travel(spark, tmp_path):
+def test_read_sessions_time_travel(spark, tmp_path, manifest_protocol):
     """read_sessions(version=...) pins a long job's read to one
     retained manifest snapshot across maintenance commits."""
     import datetime as dtm
@@ -635,7 +644,7 @@ def test_read_sessions_time_travel(spark, tmp_path):
     write_sessions(df, path, mode="overwrite")
 
     def _commit(tag):
-        c = PartitionCommitter(path, force_manifest=True)
+        c = PartitionCommitter(path)
         src = read_store(spark, path, "day")
         (
             src.withColumn("tags", F.array(F.lit(tag)))
@@ -691,7 +700,9 @@ def test_expire_dry_run_reports_without_dropping(spark, tmp_path):
     }
 
 
-def test_compaction_yields_to_concurrent_update(spark, tmp_path, monkeypatch):
+def test_compaction_yields_to_concurrent_update(
+    spark, tmp_path, monkeypatch, manifest_protocol
+):
     """A day whose manifest entry moved between compaction's read and
     its commit is NOT clobbered (expected= drops it) and is reported as
     not-compacted — no KeyError, no stale rewrite (review r7)."""
@@ -709,7 +720,7 @@ def test_compaction_yields_to_concurrent_update(spark, tmp_path, monkeypatch):
     df = spark.range(2000).selectExpr(
         "id", "CAST('2024-01-01' AS STRING) AS day"
     )
-    c = PartitionCommitter(path, force_manifest=True)
+    c = PartitionCommitter(path)
     df.repartition(8).write.partitionBy("day").parquet(c.staging_dir())
     c.commit(["day=2024-01-01"])
 
@@ -720,7 +731,7 @@ def test_compaction_yields_to_concurrent_update(spark, tmp_path, monkeypatch):
         if hit["n"] == 0 and kw.get("expected"):
             hit["n"] += 1
             # the concurrent tag update lands first
-            upd = PartitionCommitter(store, force_manifest=True)
+            upd = PartitionCommitter(store)
             spark.range(5).selectExpr(
                 "id", "CAST('2024-01-01' AS STRING) AS day"
             ).write.partitionBy("day").parquet(upd.staging_dir())
@@ -728,7 +739,7 @@ def test_compaction_yields_to_concurrent_update(spark, tmp_path, monkeypatch):
         return real(store, entries, **kw)
 
     monkeypatch.setattr(C, "commit_manifest_entries", interfering)
-    out = compact_partitions(spark, path, force_manifest=True)
+    out = compact_partitions(spark, path)
     assert hit["n"] == 1
     assert "2024-01-01" not in out  # honestly reported as not compacted
     # the concurrent update's generation survived (5 rows, not 2000)
@@ -739,25 +750,8 @@ def test_compaction_yields_to_concurrent_update(spark, tmp_path, monkeypatch):
     assert "day=2024-01-01" in load_manifest(path)
 
 
-def test_committer_rejects_expected_in_rename_mode(spark, tmp_path):
-    """expected= cannot be honored by the rename swap — a non-empty map
-    there must fail loudly instead of silently skipping the check."""
-    import pytest
-
-    from moloch_spark.sources.commit import PartitionCommitter
-
-    path = str(tmp_path / "store")
-    c = PartitionCommitter(path)  # plain local store: rename mode
-    assert not c.manifest_mode
-    spark.range(10).selectExpr(
-        "id", "CAST('2024-01-01' AS STRING) AS day"
-    ).write.partitionBy("day").parquet(c.staging_dir())
-    with pytest.raises(ValueError, match="manifest mode"):
-        c.commit(["day=2024-01-01"], expected={"day=2024-01-01": "_gen/x/y"})
-
-
 def test_compaction_yields_when_plain_day_gets_committed(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, manifest_protocol
 ):
     """The expected-absent form (review r7 #2): a day resolved from the
     PLAIN tree at compaction start that a concurrent writer
@@ -782,7 +776,7 @@ def test_compaction_yields_when_plain_day_gets_committed(
         exp = kw.get("expected") or {}
         if hit["n"] == 0 and None in exp.values():
             hit["n"] += 1
-            upd = PartitionCommitter(store, force_manifest=True)
+            upd = PartitionCommitter(store)
             spark.range(7).selectExpr(
                 "id", "CAST('2024-01-01' AS STRING) AS day"
             ).write.partitionBy("day").parquet(upd.staging_dir())
@@ -790,14 +784,16 @@ def test_compaction_yields_when_plain_day_gets_committed(
         return real(store, entries, **kw)
 
     monkeypatch.setattr(C, "commit_manifest_entries", interfering)
-    out = compact_partitions(spark, path, force_manifest=True)
+    out = compact_partitions(spark, path)
     assert hit["n"] == 1
     assert "2024-01-01" not in out
     final = resolve_partitions(path)
     assert spark.read.parquet(final["day=2024-01-01"]).count() == 7
 
 
-def test_optimize_layout_store_scan_pushes_and_prunes(spark, tmp_path):
+def test_optimize_layout_store_scan_pushes_and_prunes(
+    spark, tmp_path, manifest_protocol
+):
     """VERDICT r7 Wrong #2 ("clustered" vs "pruned"): on the COMMITTED
     store — manifest-routed read, not bare write_zordered output — a
     value predicate must (a) reach the parquet scan as a pushed filter
@@ -822,7 +818,7 @@ def test_optimize_layout_store_scan_pushes_and_prunes(spark, tmp_path):
     )
     write_sessions(df, path, mode="overwrite")
     optimize_layout(
-        spark, path, ["user_id", "packets"], n_files=8, force_manifest=True
+        spark, path, ["user_id", "packets"], n_files=8
     )
 
     # (a) the predicate reaches the scan through the manifest route
@@ -850,3 +846,45 @@ def test_optimize_layout_store_scan_pushes_and_prunes(spark, tmp_path):
     # z-order bounds the candidate set (5 of 8 on this fixture);
     # unclustered data would put u17 inside every file's [min, max]
     assert 1 <= candidates <= 5, candidates
+
+
+def test_local_append_and_layout_keep_plain_tree(spark, tmp_path):
+    """On a plain local store an append moves its files into the plain
+    day dirs and removes its staging, and optimize_layout swaps the days
+    in place without creating a manifest: a reader of the plain
+    `day=*/*.parquet` tree sees every row exactly once."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from moloch_spark.sources.commit import load_manifest
+    from moloch_spark.sources.session_store import optimize_layout
+
+    path = str(tmp_path / "store")
+    schema = "session_id string, packets long, last_packet timestamp"
+
+    def rows(lo, n):
+        return [
+            (f"s{i}", i, dt.datetime(2024, 1, 10 + i % 2, 12, i % 60))
+            for i in range(lo, lo + n)
+        ]
+
+    first = spark.createDataFrame(rows(0, 20), schema)
+    write_sessions(first, path, mode="overwrite")
+    write_sessions(spark.createDataFrame(rows(20, 20), schema), path)
+    assert os.listdir(os.path.join(path, "_gen")) == []   # staging removed
+
+    def plain_ids():
+        files = glob.glob(os.path.join(path, "day=*", "*.parquet"))
+        ids = [pq.read_table(f)["session_id"].to_pylist() for f in files]
+        return sorted(sid for part in ids for sid in part)
+
+    want = sorted(f"s{i}" for i in range(40))
+    assert plain_ids() == want
+    assert optimize_layout(spark, path, ["packets"], n_files=2) == [
+        "day=2024-01-10", "day=2024-01-11"
+    ]
+    assert load_manifest(path) == {}
+    assert plain_ids() == want
+    got = read_sessions(spark, path).collect()
+    assert sorted(r.session_id for r in got) == want

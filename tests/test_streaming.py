@@ -539,6 +539,80 @@ def test_streaming_state_is_bounded_by_open_sessions(spark, events_stream_dir, t
     assert n_open < emitted, (n_open, emitted)
 
 
+@pytest.mark.parametrize("ledger_lost", [False, True])
+def test_capture_sink_replayed_epoch_is_exactly_once(
+    spark, events_stream_dir, tmp_path, ledger_lost
+):
+    """foreachBatch is at-least-once: a driver that dies after the sink
+    wrote the last epoch but before its commits/N entry landed gets
+    that epoch again on restart. The store must hold every session
+    once — also when the crash came before the epoch ledger recorded
+    the append (`ledger_lost`): the re-run then replaces the files its
+    earlier attempt moved."""
+    import glob
+    import shutil
+
+    from moloch_spark.sources.session_store import (
+        read_sessions,
+        write_sessions_stream,
+    )
+    from moloch_spark.streaming.ledger import record_epoch
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for j, f_ in enumerate(sorted(os.listdir(events_stream_dir))[:4]):
+        dst = os.path.join(src, f_)
+        shutil.copy(os.path.join(events_stream_dir, f_), dst)
+        os.utime(dst, (1_700_000_000 + j, 1_700_000_000 + j))
+    schema = load_table(spark, "events", SF).schema
+
+    def drain(store, ckpt):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        sessions = streaming_sessionize(
+            stream, idle_timeout_s=1800, watermark_delay="1 minute"
+        )
+        q = (
+            write_sessions_stream(sessions, store, ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+
+    def stored(store):
+        return sorted(
+            (r.session_id, r.chunk_seq, r.packets, r.last_packet)
+            for r in read_sessions(spark, store).collect()
+        )
+
+    clean = str(tmp_path / "clean")
+    drain(clean, str(tmp_path / "clean_ckpt"))
+
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    drain(store, ckpt)
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    if ledger_lost:
+        record_epoch(ckpt, "session_store", last - 1)
+    drain(store, ckpt)  # restart: epoch `last` is delivered again
+
+    got = stored(store)
+    assert len(got) > 0
+    assert len(got) == len({(sid, seq) for sid, seq, _, _ in got})
+    assert got == stored(clean)
+    # the replayed epoch had sessions to duplicate (its files carry
+    # its token)
+    assert glob.glob(os.path.join(store, "day=*", f"*e{last}-*.parquet"))
+
+
 @pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
 def test_batch_idle_gap_is_exact_to_the_microsecond(spark, ts_type):
     """The batch sessionizer compares idle gaps in µs, as the stream
