@@ -3262,10 +3262,10 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-partition numpy X^T X partials, dim^2-row driver transfer),
     driver-side eigh with a fixed sign convention, scan-side projection
     with the loadings broadcast. Emits the first four whitened
-    components as scalars. Rows-only gate: the eigendecomposition is
-    not SQL-expressible; exactness vs numpy (loadings, eigenvalues,
-    projections, unit whitened variance) is pinned in
-    tests/test_similarity.py."""
+    components as scalars. Rows-only gate (registry.ORACLE_WAIVERS): the
+    eigendecomposition is not SQL-expressible; exactness vs numpy
+    (loadings, eigenvalues, projections, unit whitened variance) is
+    pinned in tests/test_similarity.py."""
     from moloch_spark.operators import pca as P
 
     emb = load_emb_spread(spark, sf_dir)

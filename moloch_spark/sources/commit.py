@@ -16,12 +16,18 @@ Portable protocol (manifest mode):
     Hadoop partition discovery, so a plain reader can never observe a
     half-written generation;
   * the commit is one atomic swap of a single small object,
-    `<store>/_manifest.json`, mapping partition name -> generation dir;
-  * readers resolve partitions through the manifest (manifest entry
-    wins over the plain directory). A crash between the data write and
-    the manifest swap leaves the manifest — and therefore every reader
-    — on the previous generation; the orphaned `_gen` dir is a vacuum
-    target, exactly like any MVCC table format.
+    `<store>/_manifest.json`, mapping partition name -> data dir (a
+    `_gen` generation, or the partition's own plain dir);
+  * a store's partition list is ONE rule: no manifest means the plain
+    `name=value` tree; a manifest — even an empty one — means its
+    entries and nothing else. The first manifest commit adopts every
+    plain partition it does not rewrite as an entry pointing at its own
+    dir, and an append that creates a partition commits its entry, so
+    nothing visible before the first commit drops out of the list. A
+    crash between the data write and the manifest swap leaves the
+    manifest — and therefore every reader — on the previous state; the
+    unreferenced dir is a vacuum target, exactly like any MVCC table
+    format.
 
 MVCC retention: a commit makes the superseded generation UNREACHABLE
 but does not delete it — a concurrent reader that resolved the old
@@ -54,21 +60,23 @@ stale copy — moved entries are skipped, the first commit wins, and the
 skipped partition is reported as not landed.
 
 The store, not the caller, picks the protocol: manifest mode when the
-path is not POSIX or the store already has a (non-empty) manifest,
-the rename swap otherwise — a rename-mode swap under a live manifest
-entry would be invisible to readers (lost update, ADVICE r5), so once
-a store has a manifest every later write goes through it. The local
-swap is the hardened two-rename (ADVICE r4): stale `.old` dirs from a
-prior crash are recovered on entry, a failure between the two renames
-restores the original directory, and first-write partitions (no
-existing dst) commit with a single rename. Appends go through the same
-committer (PartitionCommitter.append) and land in each partition's
-live directory as the store resolves it.
+path is not POSIX or the store has a manifest, the rename swap
+otherwise — a rename-mode swap would be invisible to the readers of a
+manifest (lost update, ADVICE r5), so once a store has a manifest every
+later write goes through it. The local swap is the hardened two-rename
+(ADVICE r4): stale `.old` dirs from a prior crash are recovered on
+entry, a failure between the two renames restores the original
+directory, and first-write partitions (no existing dst) commit with a
+single rename. Appends go through the same committer
+(PartitionCommitter.append) and land in each partition's live
+directory.
 
 Remaining race: an append and a rewrite of the same partition must not
 overlap — files an append moves into a directory the rewrite has
 already read are dropped when the rewrite lands. Rewrite (compact,
-optimize, tag) closed days only.
+optimize, tag) closed days only. An append that creates a partition
+whose unreferenced plain dir is still on disk (expired or superseded,
+not yet vacuumed) commits that dir with whatever files are left in it.
 """
 
 from __future__ import annotations
@@ -259,9 +267,10 @@ def _snapshot_entries(fs, root: str) -> list[tuple[int, str]]:
 
 def load_manifest(
     store: str, spark=None, *, version: int | None = None
-) -> dict[str, str]:
-    """partition name -> store-relative data dir for manifest-committed
-    partitions; empty when the store has no manifest. `version` reads a
+) -> dict[str, str] | None:
+    """partition name -> store-relative data dir, the store's whole
+    partition list; None when the store has no manifest (an EMPTY
+    manifest is a store with no partitions). `version` reads a
     retained historical snapshot instead of the current manifest (time
     travel — see manifest_versions / vacuum_store retention). If racing
     committers both claimed `version`, the snapshot with the latest
@@ -271,7 +280,7 @@ def load_manifest(
     if version is None:
         p = posixpath.join(root, MANIFEST)
         if not fs.exists(p):
-            return {}
+            return None
         return json.loads(fs.read_text(p)).get("partitions", {})
     names = [n for v, n in _snapshot_entries(fs, root) if v == version]
     if not names:
@@ -283,25 +292,6 @@ def load_manifest(
     return json.loads(fs.read_text(posixpath.join(root, name))).get(
         "partitions", {}
     )
-
-
-def snapshot_bodies(
-    store: str, spark=None, *, exclude_names: set[str] | frozenset = frozenset()
-) -> list[dict[str, str]]:
-    """The partitions map of every retained manifest snapshot, in
-    (version, name) order — the public form expire_partitions uses to
-    decide whether a retained snapshot still resolves a partition to
-    its plain dir. `exclude_names` skips snapshots by filename (a
-    dry-run caller passes the names its simulated vacuum would have
-    pruned)."""
-    fs, root = get_fs(store, spark)
-    return [
-        json.loads(fs.read_text(posixpath.join(root, n))).get(
-            "partitions", {}
-        )
-        for _v, n in _snapshot_entries(fs, root)
-        if n not in exclude_names
-    ]
 
 
 def manifest_versions(store: str, spark=None) -> list[int]:
@@ -374,13 +364,13 @@ def commit_manifest_entries(
          spot — milliseconds instead of the whole read→PUT span.
 
     `expected` (every PartitionCommitter rewrite) maps entry -> the
-    generation the rewrite was BUILT from, with None meaning "resolved
-    from the PLAIN tree — the entry must still be absent at commit
-    time": an entry whose current manifest value no longer matches is
-    dropped from the commit — a concurrent commit landed while we were
-    rewriting stale data, and it wins (our copy becomes an unreferenced
-    generation for vacuum). Without the None form, a rewrite of a
-    never-committed plain partition would pass unconditionally and
+    data dir the rewrite was BUILT from, with None meaning "the store
+    had no manifest, or no such entry — the entry must still be absent
+    at commit time": an entry whose current manifest value no longer
+    matches is dropped from the commit — a concurrent commit landed
+    while we were rewriting stale data, and it wins (our copy becomes
+    an unreferenced generation for vacuum). Without the None form, a
+    rewrite of a plain-tree partition would pass unconditionally and
     clobber an update that manifest-committed that name mid-rewrite.
     Two racing tag write-backs of one day therefore keep the first to
     commit; the second reports the day as not landed.
@@ -395,7 +385,7 @@ def commit_manifest_entries(
     lock = _acquire_manifest_lock(fs, root)
     try:
         for attempt in range(max_attempts):
-            cur = load_manifest(store, spark)
+            cur = load_manifest(store, spark) or {}
             if expected:
                 # a concurrent commit moved these entries past our read
                 # base: their data is newer than our rewrite — drop ours
@@ -433,32 +423,38 @@ def resolve_partitions(
     version: int | None = None,
     manifest: dict[str, str] | None = None,
 ) -> dict[str, str]:
-    """Every live partition of the store: name -> ABSOLUTE data dir.
-    Manifest entries override the plain directory of the same name.
-    `version` resolves through a retained manifest snapshot instead of
-    the current one (plain, never-manifest-committed partitions read
-    at their current state either way — snapshots version the
-    COMMITTED rewrites, which after the first manifest commit is every
-    rewrite: the committer then always takes manifest mode; appends
-    add files in place and are not versioned). `manifest` resolves
-    through a manifest the CALLER already loaded: a maintenance rewrite
-    that derives its data dirs and its commit-time `expected=` base
-    from two separate reads would clobber a commit landing in between
-    (the rewrite would read old data but pass the freshness check) —
-    one load must feed both."""
+    """Every live partition of the store: name -> ABSOLUTE data dir —
+    the manifest's entries when the store has one (the root is not
+    listed), the plain `name=value` tree otherwise. `version` resolves
+    through a retained manifest snapshot instead of the current one.
+    `manifest` resolves through a manifest the CALLER already loaded: a
+    maintenance rewrite that derives its data dirs and its commit-time
+    `expected=` base from two separate reads would clobber a commit
+    landing in between (the rewrite would read old data but pass the
+    freshness check) — one load must feed both."""
     fs, root = get_fs(store, spark)
-    out: dict[str, str] = {}
-    if fs.isdir(root):
-        for name in fs.listdir(root):
-            if name.startswith(("_", ".")) or "=" not in name:
-                continue
-            if fs.isdir(posixpath.join(root, name)):
-                out[name] = posixpath.join(root, name)
     if manifest is None:
         manifest = load_manifest(store, spark, version=version)
-    for name, rel in manifest.items():
-        out[name] = posixpath.join(root, rel)
-    return out
+    return _resolve(fs, root, manifest)
+
+
+def _resolve(fs, root: str, manifest: dict[str, str] | None) -> dict[str, str]:
+    if manifest is not None:
+        return {n: posixpath.join(root, rel) for n, rel in manifest.items()}
+    return {n: posixpath.join(root, n) for n in _plain_dirs(fs, root)}
+
+
+def _plain_dirs(fs, root: str) -> list[str]:
+    """The `name=value` partition dirs at the store root."""
+    if not fs.isdir(root):
+        return []
+    return [
+        n
+        for n in fs.listdir(root)
+        if "=" in n
+        and not n.startswith(("_", "."))
+        and fs.isdir(posixpath.join(root, n))
+    ]
 
 
 _INFERENCE_LOCK = threading.Lock()
@@ -512,34 +508,29 @@ def read_store(
     *,
     version: int | None = None,
 ):
-    """Manifest-aware store read. Without a manifest this is a plain
-    partitioned parquet read (zero overhead). With one, resolved
-    partition dirs are grouped by the base they hang off — the plain
-    partition tree plus one group per manifest generation token — and
-    each group reads as ONE multi-path `basePath` relation, so the plan
-    holds a handful of FileScans however many day-partitions the store
-    has accumulated (a per-partition union would be a 1000-branch plan
-    after three years of retention — VERDICT r5 #3). Partition-type
-    inference is disabled for these reads (read_exact_partitions), so
-    values stay the exact dir-name strings — the store's writer
-    convention. `version` time-travels to a retained manifest snapshot
-    — reproducible reads for a long job spanning maintenance commits,
-    as long as vacuum retention covers it."""
-    # load_manifest raises FileNotFoundError for a MISSING snapshot
-    # version; an EMPTY snapshot is a legitimate committed state (an
-    # expire_partitions run that popped every entry writes one) and
-    # serves the plain tree exactly like the current-state read
-    # (ADVICE r6).
+    """The store's partition list (resolve_partitions) as one
+    DataFrame. Without a manifest this is one basePath read of the
+    plain tree. With one, the entries are grouped by the base they hang
+    off — the plain tree plus one group per `_gen` token — and each
+    group reads as ONE multi-path relation, so the plan holds a handful
+    of FileScans however many day-partitions the store has accumulated
+    (a per-partition union would be a 1000-branch plan after three
+    years of retention — VERDICT r5 #3). Partition-type inference is
+    off for both (read_exact_partitions), so partition values are the
+    exact dir-name strings whether or not the store has a manifest.
+    `version` time-travels to a retained manifest snapshot —
+    reproducible reads for a long job spanning maintenance commits, as
+    long as vacuum retention covers it; load_manifest raises
+    FileNotFoundError for a version never written or already
+    reclaimed."""
     manifest = load_manifest(store, spark, version=version)
-    if not manifest:
-        return spark.read.parquet(store)
-    parts = resolve_partitions(store, spark, version=version)
-    if partition_col is not None:
-        parts = {
-            n: d
-            for n, d in parts.items()
-            if n.split("=", 1)[0] == partition_col
-        }
+    if manifest is None:
+        return read_exact_partitions(spark, store, [store])
+    parts = {
+        n: d
+        for n, d in resolve_partitions(store, spark, manifest=manifest).items()
+        if partition_col is None or n.split("=", 1)[0] == partition_col
+    }
     if not parts:
         raise FileNotFoundError(
             f"store {store!r} has a manifest but no partition resolves"
@@ -562,13 +553,13 @@ class PartitionCommitter:
         # or c.append()                     # add the staged files
 
     The store picks the protocol when the committer is built: manifest
-    mode when the path is not POSIX or the store has a non-empty
-    manifest (a rename swap under a live manifest entry would leave
-    readers on the stale generation, ADVICE r5), rename mode otherwise.
-    Both stage under `<store>/_gen/<token>`, invisible to readers.
-    Rename mode swaps each partition with the hardened two-rename;
-    manifest mode commits all partitions with one manifest swap
-    (all-or-nothing across the set, which the rename mode cannot give).
+    mode when the path is not POSIX or the store has a manifest (a
+    rename swap would be invisible to the manifest's readers, ADVICE
+    r5), rename mode otherwise. Both stage under `<store>/_gen/<token>`,
+    invisible to readers. Rename mode swaps each partition with the
+    hardened two-rename; manifest mode commits all partitions with one
+    manifest swap (all-or-nothing across the set, which the rename mode
+    cannot give).
 
     The manifest is read ONCE, here: `parts` (name -> live data dir)
     is what `read` scans and what `commit` checks freshness against —
@@ -580,11 +571,9 @@ class PartitionCommitter:
         self._spark = spark
         self.token = token or uuid.uuid4().hex[:12]
         self.manifest = load_manifest(self.store, spark)
-        self.parts = resolve_partitions(
-            self.store, spark, manifest=self.manifest
-        )
-        self.manifest_mode = not is_posix_path(self.store) or bool(
-            self.manifest
+        self.parts = _resolve(self._fs, self.store, self.manifest)
+        self.manifest_mode = (
+            not is_posix_path(self.store) or self.manifest is not None
         )
         self._staging = posixpath.join(self.store, "_gen", self.token)
 
@@ -600,7 +589,9 @@ class PartitionCommitter:
         """Replace `partitions` with their staged rewrite; returns the
         ones that landed. In manifest mode the expected= base is this
         committer's manifest read: a partition a concurrent commit moved
-        since then keeps that commit, and is left out of the result."""
+        since then keeps that commit, and is left out of the result. The
+        first manifest commit of a store also adopts every other plain
+        partition as an entry pointing at its own dir."""
         missing = [
             p
             for p in partitions
@@ -619,10 +610,13 @@ class PartitionCommitter:
             ours = {
                 p: posixpath.join("_gen", self.token, p) for p in partitions
             }
+            # the store's first manifest commit adopts its plain tree
+            adopt = {n: n for n in self.parts} if self.manifest is None else {}
+            base = self.manifest or {}
             final = commit_manifest_entries(
                 self.store,
-                ours,
-                expected={p: self.manifest.get(p) for p in partitions},
+                adopt | ours,
+                expected={p: base.get(p) for p in adopt | ours},
                 spark=self._spark,
             )
             return [p for p in partitions if final.get(p) == ours[p]]
@@ -637,22 +631,28 @@ class PartitionCommitter:
     def append(self) -> None:
         """Move the staged files into each partition's live directory as
         this committer resolved it — the plain dir, or its manifest
-        generation; a new partition gets a plain dir — then remove the
-        staging.
+        generation; a new partition gets a plain dir — then, on a store
+        with a manifest, commit an entry for each new partition, and
+        remove the staging.
 
         Each moved file is renamed `<token>-<name>`, and files already
         carrying the token are dropped from the target dir first: an
         append re-run under the same token (a replayed stream epoch
-        whose earlier attempt crashed mid-move) replaces that attempt
-        instead of duplicating it, provided it writes the same
-        partitions, as a deterministic replay does. Appends are not
-        versioned: time travel through an older manifest snapshot sees
-        the appended files too."""
+        whose earlier attempt crashed mid-move, or before its entry
+        commit) replaces that attempt instead of duplicating it,
+        provided it writes the same partitions, as a deterministic
+        replay does. Until its entry commits, a new partition of a
+        manifest store is invisible. Files added to an existing
+        partition are not versioned: time travel through an older
+        manifest snapshot that names the partition sees them too."""
         fs, mark = self._fs, f"{self.token}-"
+        new = []
         for name in fs.listdir(self._staging):
             if "=" not in name or name.startswith(("_", ".")):
                 continue
             src = posixpath.join(self._staging, name)
+            if name not in self.parts:
+                new.append(name)
             dst = self.parts.get(name) or posixpath.join(self.store, name)
             fs.mkdirs(dst)
             for f in fs.listdir(dst):
@@ -663,6 +663,13 @@ class PartitionCommitter:
                     fs.rename(
                         posixpath.join(src, f), posixpath.join(dst, mark + f)
                     )
+        if self.manifest is not None and new:
+            commit_manifest_entries(
+                self.store,
+                {n: n for n in new},
+                expected=dict.fromkeys(new),
+                spark=self._spark,
+            )
         fs.delete(self._staging)
 
 
@@ -702,7 +709,7 @@ ORPHAN_COMMIT_GRACE_S = 900.0
 def vacuum_store(
     store: str, *, retain_s: float = 0.0, spark=None, dry_run: bool = False
 ) -> list[str]:
-    """Reclaim manifest snapshots and `_gen` data unreachable for at
+    """Reclaim manifest snapshots and data dirs unreachable for at
     least `retain_s` seconds — age-gated like Delta's
     `VACUUM ... RETAIN`, and keyed on SUPERSESSION time, not creation
     time (a generation that served as current for a week is still
@@ -735,7 +742,14 @@ def vacuum_store(
          can no longer delete its staging mid-write (VERDICT r7 Wrong
          #1); genuine crash residue reclaims once it outlives the
          grace;
-      3. `.tmp-` staging residue from crashed atomic puts at the store
+      3. on a store with a manifest, a plain `name=value` dir is
+         reclaimed like a `_gen` token by the same two rules: the
+         partition an expiry removed goes when the last snapshot that
+         names it does, and one no retained state names (superseded by
+         the first manifest commit, or an append that crashed before
+         its entry commit) goes past the orphan grace. Without a
+         manifest the plain tree is the store and is never touched;
+      4. `.tmp-` staging residue from crashed atomic puts at the store
          root is swept on the same orphan grace.
 
     Because snapshot pruning gates on supersession age, the surviving
@@ -754,9 +768,8 @@ def vacuum_store(
     def _delete(p: str) -> None:
         if not dry_run:
             fs.delete(p)
-    current = json.dumps(
-        {"partitions": load_manifest(store, spark)}, sort_keys=True
-    )
+    manifest = load_manifest(store, spark)
+    current = json.dumps({"partitions": manifest}, sort_keys=True)
     entries = _snapshot_entries(fs, root)
     paths = {n: posixpath.join(root, n) for _, n in entries}
     bodies = {n: fs.read_text(paths[n]) for _, n in entries}
@@ -784,7 +797,7 @@ def vacuum_store(
             surviving.append(name)
             continue
         for rel in json.loads(bodies[name]).get("partitions", {}).values():
-            reclaimed_refs.add(rel.split("/")[1])
+            reclaimed_refs.add(_unit(rel))
         _delete(paths[name])
         removed.append(name)
     # crashed atomic-put staging residue at the store root: HadoopFS
@@ -804,78 +817,89 @@ def vacuum_store(
                 if now - fs.mtime(p) >= max(retain_s, ORPHAN_COMMIT_GRACE_S):
                     _delete(p)
                     removed.append(name)
-    gen_root = posixpath.join(root, "_gen")
-    if not fs.isdir(gen_root):
-        return removed
-    live = set(load_manifest(store, spark).values())
+    live = set((manifest or {}).values())
     for name in surviving:
         live |= set(json.loads(bodies[name]).get("partitions", {}).values())
-    live_tokens = {rel.split("/")[1] for rel in live}
-    for token in fs.listdir(gen_root):
-        tdir = posixpath.join(gen_root, token)
-        if token not in live_tokens:
-            # a token whose snapshots were reclaimed THIS run is a
-            # superseded generation already past the supersession gate;
-            # a token referenced by NO retained state is a crashed OR
-            # IN-FLIGHT writer — age that one on the staging dir
-            # itself, never below the orphan grace (VERDICT r7 Wrong
-            # #1: at retain_s=0 a committer between staging_dir() and
-            # commit() would have its staging deleted mid-write; real
-            # crash residue reclaims once it outlives the grace)
-            if token not in reclaimed_refs and (
-                now - fs.mtime(tdir) < max(retain_s, ORPHAN_COMMIT_GRACE_S)
+    live_units = {_unit(rel) for rel in live}
+    gen_root = posixpath.join(root, "_gen")
+    units = [
+        posixpath.join("_gen", t)
+        for t in (fs.listdir(gen_root) if fs.isdir(gen_root) else [])
+    ]
+    if manifest is not None:
+        units += _plain_dirs(fs, root)
+    for unit in units:
+        udir = posixpath.join(root, unit)
+        if unit not in live_units:
+            # a unit whose snapshots were reclaimed THIS run is
+            # superseded data already past the supersession gate; a
+            # unit referenced by NO retained state is a crashed OR
+            # IN-FLIGHT writer — age that one on the dir itself, never
+            # below the orphan grace (VERDICT r7 Wrong #1: at retain_s=0
+            # a committer between staging_dir() and commit() would have
+            # its staging deleted mid-write; real crash residue
+            # reclaims once it outlives the grace)
+            if unit not in reclaimed_refs and (
+                now - fs.mtime(udir) < max(retain_s, ORPHAN_COMMIT_GRACE_S)
             ):
                 continue
-            _delete(tdir)
-            removed.append(posixpath.join("_gen", token))
+            _delete(udir)
+            removed.append(unit)
             continue
+        if not unit.startswith("_gen/"):
+            continue  # a live plain partition
         # token partially live: reclaim superseded partitions inside it
-        for name in fs.listdir(tdir):
+        for name in fs.listdir(udir):
             if name.startswith(("_", ".")) or "=" not in name:
                 continue
-            rel = posixpath.join("_gen", token, name)
+            rel = posixpath.join(unit, name)
             if rel not in live:
-                _delete(posixpath.join(tdir, name))
+                _delete(posixpath.join(udir, name))
                 removed.append(rel)
         if all(
-            n.startswith(("_", "."))
-            or posixpath.join("_gen", token, n) in removed
-            for n in fs.listdir(tdir)
+            n.startswith(("_", ".")) or posixpath.join(unit, n) in removed
+            for n in fs.listdir(udir)
         ):  # only bookkeeping (or would-be-removed partitions) left
-            _delete(tdir)
-            removed.append(posixpath.join("_gen", token))
+            _delete(udir)
+            removed.append(unit)
     return removed
 
 
+def _unit(rel: str) -> str:
+    """The dir vacuum reclaims as one: `_gen/<token>` for a generation
+    entry, the partition dir itself for a plain entry."""
+    return posixpath.dirname(rel) or rel
+
+
 def consolidate_store(spark, store: str) -> list[str]:
-    """Maintenance: rewrite every manifest-resolved partition through
-    ONE committer generation (the Delta OPTIMIZE / checkpoint analog).
+    """Maintenance: rewrite every `_gen`-resolved partition through ONE
+    committer generation (the Delta OPTIMIZE / checkpoint analog).
 
     Each manifest commit leaves its partitions under its own
     `_gen/<token>`, and read_store plans one scan group per token — so
     a year of daily single-partition tag updates would grow the plan
     back to ~365 branches, the exact sprawl the basePath grouping
-    exists to prevent. Consolidation reads all manifest-resolved
-    partitions as one grouped relation and rewrites them under a
-    single new token in ONE Spark job (no per-partition driver loop),
-    then commits the whole set atomically; afterwards the plan is
-    (plain tree + 1 generation) regardless of update history, and the
-    superseded tokens age out via vacuum_store retention. Run it on
-    the same maintenance cadence as compaction. Returns the
+    exists to prevent. Consolidation reads all `_gen` partitions as one
+    grouped relation and rewrites them under a single new token in ONE
+    Spark job (no per-partition driver loop), then commits the whole
+    set atomically; plain entries stay where they are. Afterwards the
+    plan is (plain tree + 1 generation) regardless of update history,
+    and the superseded tokens age out via vacuum_store retention. Run
+    it on the same maintenance cadence as compaction. Returns the
     consolidated partition names."""
     from pyspark.sql import functions as F
 
     c = PartitionCommitter(store, spark=spark)
-    tokens = {rel.split("/")[1] for rel in c.manifest.values()}
-    if len(tokens) <= 1:
+    manifest = c.manifest or {}
+    parts = sorted(n for n, rel in manifest.items() if rel.startswith("_gen/"))
+    if len({_unit(manifest[n]) for n in parts}) <= 1:
         return []
-    cols = {name.split("=", 1)[0] for name in c.manifest}
+    cols = {name.split("=", 1)[0] for name in parts}
     if len(cols) != 1:
         raise ValueError(
             f"store {store!r} manifest mixes partition columns {sorted(cols)}"
         )
     (col,) = cols
-    parts = sorted(c.manifest)
     (
         c.read(spark, parts)
         .repartition(F.col(col))

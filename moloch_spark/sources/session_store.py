@@ -49,9 +49,10 @@ def write_sessions(
     `mode="append"` goes through the store's committer
     (sources/commit.PartitionCommitter.append): the files are staged
     under `_gen/<token>` and moved into each day's live directory as
-    the store resolves it, so an append to a store with a manifest is
-    visible to read_sessions. Any other mode is one plain Spark write
-    of the whole store (`"overwrite"` builds it afresh).
+    the store resolves it; on a store with a manifest, a day the append
+    creates lands with one manifest commit of its entry. Any other mode
+    is one plain Spark write of the whole store (`"overwrite"` builds it
+    afresh).
     """
     if mode == "append":
         _append(sessions, path, ts_col)
@@ -124,9 +125,10 @@ def write_sessions_stream(
 def read_sessions(
     spark: SparkSession, path: str, *, version: int | None = None
 ) -> DataFrame:
-    """Manifest-aware store read: a plain partitioned parquet read when
-    no partition has been manifest-committed (the normal local case),
-    the commit-protocol resolver otherwise (object-store updates).
+    """The store's partition list as one DataFrame
+    (sources/commit.read_store): the plain day tree when the store has
+    no manifest, the manifest's entries and nothing else when it has
+    one. `day` is the partition dir's `yyyy-MM-dd` string either way.
     `version` time-travels to a retained manifest snapshot — a long
     job spanning maintenance commits pins its read to one version and
     stays reproducible as long as vacuum retention covers it."""
@@ -194,106 +196,48 @@ def expire_partitions(
     dry_run: bool = False,
 ) -> list[str]:
     """Retention: drop partitions older than keep_days (db.pl expire).
-    Returns the dropped partition names. `dry_run=True` reports what a
-    real run would drop — including honoring the same snapshot-driven
-    deferrals, simulated against a dry-run vacuum — while changing
-    nothing (vacuum_store's DRY RUN counterpart for the destructive
-    retention step).
+    Returns the dropped partition names; `dry_run=True` returns them
+    and changes nothing.
 
-    Manifest-resolved partitions are expired by DROPPING THEIR MANIFEST
-    ENTRY only; the data stays on disk until the age-gated
-    `vacuum_store(retain_s=vacuum_retain_s)` reclaims it — so a reader
-    mid-scan on the pre-expiry manifest, or a read_store(version=...)
-    inside the retention horizon, still completes. vacuum_retain_s
-    defaults to the orphan-commit grace (ADVICE r6) to also protect
-    concurrent READERS of just-superseded generations; since round 8 a
-    concurrent WRITER's staging is safe at ANY retention —
-    vacuum_store floors never-referenced tokens at the orphan grace
-    itself (VERDICT r7 Wrong #1). Pass an explicit horizon to widen
-    it, or 0 for a standalone immediate history cleanup.
+    Without a manifest the expired plain dirs are deleted. With one,
+    the expired entries leave the partition list in ONE removal commit,
+    and `vacuum_store(retain_s=vacuum_retain_s)` then reclaims what no
+    retained snapshot still names — so a reader mid-scan on the
+    pre-expiry manifest, or a read_store(version=...) inside the
+    retention horizon, still completes. vacuum_retain_s defaults to the
+    orphan-commit grace (ADVICE r6) to protect concurrent READERS of
+    just-superseded data; a concurrent WRITER's staging is safe at ANY
+    retention — vacuum_store floors never-referenced dirs at the orphan
+    grace itself (VERDICT r7 Wrong #1). Pass an explicit horizon to
+    widen it, or 0 for a standalone immediate history cleanup.
 
-    A manifest-backed partition whose PLAIN dir is still resolved by a
-    retained snapshot (one written before the partition's first
-    manifest commit) is DEFERRED, not expired (ADVICE r6): popping its
-    entry would unshadow the stale plain dir for current readers, and
-    deleting the dir would break time travel inside the retention
-    horizon. A later run expires it once vacuum has aged that snapshot
-    out. Plain, never-manifest-committed partitions have no snapshot of
-    their own protecting them and are deleted inline, as before."""
-    import posixpath
-
+    The removal commit merges with concurrent commits on OTHER
+    partitions (commit_manifest_entries); one re-committing an EXPIRED
+    name loses to the removal — retention beats backfill, the same
+    outcome as the reference's index-wide expiry (db/db.pl)."""
     from moloch_spark.sources.commit import (
         ORPHAN_COMMIT_GRACE_S,
+        PartitionCommitter,
         commit_manifest_entries,
-        load_manifest,
-        resolve_partitions,
-        snapshot_bodies,
         vacuum_store,
     )
     from moloch_spark.sources.fs import get_fs
 
     if vacuum_retain_s is None:
         vacuum_retain_s = ORPHAN_COMMIT_GRACE_S
-    fs, root = get_fs(path, spark)
     now = now or dt.date.today()
     cutoff = (now - dt.timedelta(days=keep_days)).isoformat()
-    dropped: list[str] = []
-    if not fs.isdir(root):
+    store = PartitionCommitter(path, spark=spark)  # one manifest read
+    dropped = sorted(n for n in store.parts if n.split("=", 1)[1] < cutoff)
+    if dry_run or not dropped:
         return dropped
-    expirable = {
-        name: pdir
-        for name, pdir in resolve_partitions(path).items()
-        if name.split("=", 1)[1] < cutoff
-    }
-    if not expirable:
-        return dropped  # routine tick, nothing past the cutoff: one
-        # listdir + manifest read, no vacuum / snapshot-body scans
-    # age superseded snapshots out FIRST so long-gone history does not
-    # defer expiry below (a dry run simulates the same pruning and
-    # excludes the would-be-pruned snapshots from the deferral check)
-    if dry_run:
-        pruned = {
-            n
-            for n in vacuum_store(
-                path, retain_s=vacuum_retain_s, dry_run=True
-            )
-            if n.startswith("_manifest.v")
-        }
-    else:
-        vacuum_store(path, retain_s=vacuum_retain_s)
-        pruned = set()
-    manifest = load_manifest(path)
-    noncurrent_snaps = [
-        b
-        for b in snapshot_bodies(path, exclude_names=pruned)
-        if b != manifest
-    ]
-    popped: list[str] = []
-    for name, pdir in sorted(expirable.items()):
-        plain = posixpath.join(root, name)
-        if name in manifest:
-            if fs.isdir(plain) and any(
-                name not in b for b in noncurrent_snaps
-            ):
-                continue  # deferred: a retained snapshot needs the plain dir
-            if not dry_run:
-                popped.append(name)
-                # the stale plain dir (shadowed until now by the
-                # manifest entry) goes inline — no retained snapshot
-                # resolves to it
-                if fs.isdir(plain):
-                    fs.delete(plain)
-        elif not dry_run:
-            fs.delete(pdir)
-        dropped.append(name)
-    if not dry_run and popped:
-        # removal-based commit: a concurrent tag write-back on a
-        # DIFFERENT partition landing mid-expiry survives (merge/retry,
-        # commit_manifest_entries); one re-committing an EXPIRED name
-        # loses to the removal — retention beats backfill, the same
-        # outcome as the reference's index-wide expiry (db/db.pl)
-        commit_manifest_entries(path, removals=popped)
-        vacuum_store(path, retain_s=vacuum_retain_s)
+    if store.manifest is None:
+        fs, _root = get_fs(path, spark)
+        for name in dropped:
+            fs.delete(store.parts[name])
+        return dropped
+    commit_manifest_entries(path, removals=dropped, spark=spark)
+    vacuum_store(path, retain_s=vacuum_retain_s, spark=spark)
     return dropped
 
 

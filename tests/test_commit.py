@@ -79,7 +79,7 @@ def test_manifest_crash_between_write_and_commit(
     )
     # <crash here: commit() never runs>
     assert _store_rows(spark, path) == before          # no partial visible
-    assert load_manifest(path) == {}
+    assert load_manifest(path) is None               # still the plain tree
     # while young, the staging is indistinguishable from an IN-FLIGHT
     # writer: protected at any retain_s (VERDICT r7 Wrong #1) ...
     assert vacuum_store(path) == []
@@ -267,6 +267,100 @@ def test_read_store_plan_bounded_by_generations(
     assert len(got) == 80
     assert got["s1-0"] == ["gen1"] and got["s2-0"] == ["genB"]
     assert got["s0-0"] == ["old"]
+
+
+def test_manifest_store_is_exactly_its_manifest(
+    spark, tmp_path, monkeypatch, manifest_protocol
+):
+    """The first manifest commit adopts the plain days it does not
+    rewrite; after it, a plain `day=` dir the manifest does not name is
+    never read — not by read_store, not by PartitionCommitter.parts, not
+    by expire_partitions — and opening the store does not list its
+    root. vacuum_store reclaims such a dir past the orphan grace."""
+    from moloch_spark.sources import fs as fs_mod
+    from moloch_spark.sources.commit import ORPHAN_COMMIT_GRACE_S
+    from moloch_spark.sources.session_store import (
+        expire_partitions,
+        write_sessions,
+    )
+
+    path = str(tmp_path / "store")
+    _mk_store(spark, path)
+    t1 = _tag_day2(spark, path, "gen1")
+    assert load_manifest(path) == {
+        "day=2024-03-01": "day=2024-03-01",
+        "day=2024-03-02": f"_gen/{t1}/day=2024-03-02",
+        "day=2024-03-03": "day=2024-03-03",
+    }
+    # a stray plain day the manifest does not name (as a crashed append
+    # leaves one), older than every listed day
+    stray = spark.createDataFrame(
+        [("stray", dt.datetime(2024, 2, 1, 12), ["x"])],
+        "session_id string, last_packet timestamp, tags array<string>",
+    )
+    elsewhere = str(tmp_path / "elsewhere")
+    write_sessions(stray, elsewhere, mode="overwrite")
+    stray_dir = os.path.join(path, "day=2024-02-01")
+    os.rename(os.path.join(elsewhere, "day=2024-02-01"), stray_dir)
+
+    listed = []
+    real_listdir = fs_mod.LocalFS.listdir
+
+    def spy(self, p):
+        listed.append(p.rstrip("/"))
+        return real_listdir(self, p)
+
+    monkeypatch.setattr(fs_mod.LocalFS, "listdir", spy)
+    rows = _store_rows(spark, path)
+    c = PartitionCommitter(path)
+    assert path not in listed                          # no root listing
+    assert "stray" not in rows and len(rows) == 9
+    assert "day=2024-02-01" not in c.parts
+    assert expire_partitions(
+        spark, path, keep_days=30, now=dt.date(2024, 3, 20), dry_run=True
+    ) == []
+    assert expire_partitions(
+        spark, path, keep_days=30, now=dt.date(2024, 3, 20)
+    ) == []
+    assert os.path.isdir(stray_dir)
+    monkeypatch.setattr(fs_mod.LocalFS, "listdir", real_listdir)
+    # unreferenced: young, it may be an in-flight append; old, it goes
+    assert "day=2024-02-01" not in vacuum_store(path)
+    old = time.time() - 2 * ORPHAN_COMMIT_GRACE_S
+    os.utime(stray_dir, (old, old))
+    assert "day=2024-02-01" in vacuum_store(path)
+    assert not os.path.isdir(stray_dir)
+    assert len(_store_rows(spark, path)) == 9
+
+
+def test_append_of_a_new_day_is_a_manifest_commit(
+    spark, tmp_path, manifest_protocol
+):
+    """A day an append creates on a manifest store is in the manifest
+    and in the next snapshot; time travel to the snapshot before the
+    append does not see it."""
+    from moloch_spark.sources.commit import manifest_versions
+    from moloch_spark.sources.session_store import write_sessions
+
+    path = str(tmp_path / "store")
+    _mk_store(spark, path)
+    _tag_day2(spark, path, "gen1")
+    [v1] = manifest_versions(path)
+    new = spark.createDataFrame(
+        [("n-0", dt.datetime(2024, 3, 5, 12), ["new"])],
+        "session_id string, last_packet timestamp, tags array<string>",
+    )
+    write_sessions(new, path, mode="append")
+    assert load_manifest(path)["day=2024-03-05"] == "day=2024-03-05"
+    v1_, v2 = manifest_versions(path)
+    assert v1_ == v1
+    at = {
+        v: {r.session_id for r in read_store(spark, path, "day", version=v).collect()}
+        for v in (v1, v2)
+    }
+    assert "n-0" in at[v2] and "n-0" not in at[v1]
+    assert at[v2] - {"n-0"} == at[v1]
+    assert _store_rows(spark, path)["n-0"] == ["new"]
 
 
 def test_update_tags_partitioned_manifest_mode(

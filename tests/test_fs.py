@@ -120,8 +120,10 @@ def test_partition_commit_protocol_over_hadoopfs(
     )
     c.commit(["day=2024-03-02"])
 
-    assert load_manifest(store) == {
-        "day=2024-03-02": f"_gen/{c.token}/day=2024-03-02"
+    assert load_manifest(store) == {            # other days adopted
+        "day=2024-03-01": "day=2024-03-01",
+        "day=2024-03-02": f"_gen/{c.token}/day=2024-03-02",
+        "day=2024-03-03": "day=2024-03-03",
     }
     got = {
         r.session_id: sorted(r.tags)

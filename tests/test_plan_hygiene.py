@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from moloch_spark.plans import formatted_plan
-from moloch_spark.registry import all_oracles, all_queries
+from moloch_spark.registry import ORACLE_WAIVERS, all_oracles, all_queries
 
 SF = "/root/testdata/sf0.001"
 
@@ -109,14 +109,12 @@ def test_no_accidental_nested_loops(spark, name):
 def test_every_query_has_oracle_or_reason():
     qs, os_ = all_queries(), all_oracles()
     missing = set(qs) - set(os_)
-    # rows-only queries: only PCA's eigendecomposition remains
-    # structurally non-SQL (exactness-pinned against numpy in tests).
-    # bpe_train_and_apply and quality_classifier_filter gained full
-    # DuckDB oracles in r11 (unrolled training rounds / recursive-CTE
-    # encode); streaming_sessionize_closed regained its oracle in r4.
-    assert missing == {
-        "embedding_pca_whiten",
-    }, missing
+    # rows-only queries are exactly the registry's written waivers
+    # (bpe_train_and_apply and quality_classifier_filter gained full
+    # DuckDB oracles in r11; streaming_sessionize_closed regained its
+    # oracle in r4)
+    assert missing == set(ORACLE_WAIVERS), missing
+    assert all(ORACLE_WAIVERS.values())
 
 
 def test_bench_subset_rejects_unknown_names():

@@ -133,9 +133,7 @@ def test_retention_defers_manifest_data_to_vacuum(
     assert dropped == ["day=2024-01-10"]
     # invisible to new readers, but the generation survives for
     # readers inside the retention horizon
-    # (the emptied manifest routes read_store to the plain parquet
-    # read, where `day` comes back date-typed — normalize to str)
-    assert {str(r.day) for r in read_store(spark, path, "day").collect()} == {
+    assert {r.day for r in read_store(spark, path, "day").collect()} == {
         "2024-01-11", "2024-01-12"
     }
     assert os.path.isdir(gen_dir)
@@ -317,19 +315,98 @@ def test_update_tags_bucketed_no_shuffle_roundtrip(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_tags_bk__staged")
 
 
-def test_expire_defers_partition_needed_by_presnapshot(
+def _two_day_store(spark, path, ndays=2):
+    import datetime as dtm
+
+    rows = [
+        (f"s{d}-{i}", dtm.datetime(2024, 1, 10 + d, 12, i), ["old"])
+        for d in range(ndays)
+        for i in range(2)
+    ]
+    df = spark.createDataFrame(
+        rows, "session_id string, last_packet timestamp, tags array<string>"
+    )
+    write_sessions(df, path, mode="overwrite")
+
+
+def _tag_day(spark, path, day, tag):
+    from moloch_spark.sources.commit import PartitionCommitter, read_store
+
+    c = PartitionCommitter(path)
+    src = read_store(spark, path, "day").filter(F.col("day") == day)
+    (
+        src.withColumn("tags", F.array(F.lit(tag)))
+        .repartition(F.col("day"))
+        .write.partitionBy("day")
+        .parquet(c.staging_dir())
+    )
+    c.commit([f"day={day}"])
+
+
+def test_expire_drops_at_once_and_time_travel_reads_until_vacuum(
     spark, tmp_path, manifest_protocol
 ):
-    """ADVICE r6: a retained snapshot written BEFORE a partition's first
-    manifest commit resolves that partition to its PLAIN dir. Expiring
-    the partition then must neither delete the plain dir (breaks
-    read_store(version=...) inside the horizon) nor pop the manifest
-    entry while the dir stays (unshadows stale data for current
-    readers) — it defers, and a later run past the horizon expires."""
-    import datetime as dtm
-    import glob
+    """Expiring a day of a manifest store is one removal commit: the
+    day leaves the partition list at once, with no deferral, even while
+    a retained snapshot from before the expiry still names its plain
+    dir. Time travel through that snapshot reads the day's rows until
+    vacuum_store, run past the horizon, deletes the plain dir."""
     import time as _time
 
+    from moloch_spark.sources.commit import (
+        load_manifest,
+        manifest_versions,
+        read_store,
+        vacuum_store,
+    )
+
+    path = str(tmp_path / "store")
+    _two_day_store(spark, path)
+    _tag_day(spark, path, "2024-01-11", "B")   # v1 adopts plain day 10
+    [v1] = manifest_versions(path)
+    assert load_manifest(path, version=v1)["day=2024-01-10"] == "day=2024-01-10"
+    plain10 = os.path.join(path, "day=2024-01-10")
+
+    dropped = expire_partitions(
+        spark, path, keep_days=9, now=dt.date(2024, 1, 20),
+        vacuum_retain_s=3600.0,
+    )
+    assert dropped == ["day=2024-01-10"]               # at once
+    assert "day=2024-01-10" not in load_manifest(path)
+    assert os.path.isdir(plain10)                      # kept for v1
+    cur = read_store(spark, path, "day").collect()
+    assert {r.day for r in cur} == {"2024-01-11"}
+    old = {
+        r.session_id: sorted(r.tags)
+        for r in read_store(spark, path, "day", version=v1).collect()
+    }
+    assert old["s0-0"] == ["old"] and old["s1-0"] == ["B"]
+
+    assert "day=2024-01-10" not in vacuum_store(path, retain_s=3600.0)
+    assert os.path.isdir(plain10)                      # inside the horizon
+    # past the horizon: v1 goes, and with it the plain dir it named
+    old_t = _time.time() - 7200
+    for n in os.listdir(path):
+        if n.startswith("_manifest.v"):
+            os.utime(os.path.join(path, n), (old_t, old_t))
+    removed = vacuum_store(path, retain_s=3600.0)
+    assert "day=2024-01-10" in removed
+    assert not os.path.isdir(plain10)
+    with pytest.raises(FileNotFoundError, match="not found"):
+        read_store(spark, path, "day", version=v1)
+    assert {r.day for r in read_store(spark, path, "day").collect()} == {
+        "2024-01-11"
+    }
+
+
+def test_time_travel_to_empty_snapshot_is_empty(
+    spark, tmp_path, manifest_protocol
+):
+    """An EMPTY manifest is a store with no partitions: once expiry has
+    removed every entry, neither the current read nor time travel to
+    that snapshot falls back to the plain dirs still on disk; the
+    snapshot before the expiry still reads them, and a never-written
+    version raises."""
     from moloch_spark.sources.commit import (
         PartitionCommitter,
         load_manifest,
@@ -338,123 +415,61 @@ def test_expire_defers_partition_needed_by_presnapshot(
     )
 
     path = str(tmp_path / "store")
-    rows = [
-        (f"s{d}-{i}", dtm.datetime(2024, 1, 10 + d, 12, i), ["old"])
-        for d in range(2)
-        for i in range(2)
-    ]
-    df = spark.createDataFrame(
-        rows, "session_id string, last_packet timestamp, tags array<string>"
-    )
-    write_sessions(df, path, mode="overwrite")
-
-    def _commit(day, tag):
-        c = PartitionCommitter(path)
-        src = read_store(spark, path, "day").filter(F.col("day") == day)
-        (
-            src.withColumn("tags", F.array(F.lit(tag)))
-            .repartition(F.col("day"))
-            .write.partitionBy("day")
-            .parquet(c.staging_dir())
-        )
-        c.commit([f"day={day}"])
-
-    _commit("2024-01-11", "B")        # v1: lacks day=2024-01-10
-    _commit("2024-01-10", "A")        # v2: day 10's FIRST manifest commit
-    v1 = manifest_versions(path)[0]
-    plain10 = os.path.join(path, "day=2024-01-10")
-    assert os.path.isdir(plain10)
-
-    # inside the horizon: v1 still resolves day 10 to the plain dir ->
-    # day 10's expiry is deferred (keep_days puts the cutoff between
-    # the two days, so only day 10 is expiry-eligible)
+    _two_day_store(spark, path)
+    _tag_day(spark, path, "2024-01-10", "M")
+    [v1] = manifest_versions(path)
     dropped = expire_partitions(
-        spark, path, keep_days=9, now=dt.date(2024, 1, 20),
+        spark, path, keep_days=1, now=dt.date(2024, 2, 1),
         vacuum_retain_s=3600.0,
     )
-    assert dropped == []                              # deferred
-    assert os.path.isdir(plain10)                     # plain dir intact
-    assert "day=2024-01-10" in load_manifest(path)    # entry kept
-    # time travel through the pre-commit snapshot still sees the plain rows
-    old_rows = {
+    assert dropped == ["day=2024-01-10", "day=2024-01-11"]
+    v_empty = manifest_versions(path)[-1]
+    assert load_manifest(path) == load_manifest(path, version=v_empty) == {}
+    assert os.path.isdir(os.path.join(path, "day=2024-01-11"))
+    c = PartitionCommitter(path)
+    assert c.manifest_mode and c.parts == {}
+    for version in (None, v_empty):
+        with pytest.raises(FileNotFoundError, match="no partition resolves"):
+            read_store(spark, path, "day", version=version)
+    got = {
         r.session_id: sorted(r.tags)
         for r in read_store(spark, path, "day", version=v1).collect()
     }
-    assert old_rows["s0-0"] == ["old"]                # plain-resolved day 10
-    assert old_rows["s1-0"] == ["B"]
-    # current readers still see the COMMITTED day-10 generation (not the
-    # stale plain rows)
-    cur = {
-        r.session_id: sorted(r.tags)
-        for r in read_store(spark, path, "day").collect()
-    }
-    assert cur["s0-0"] == ["A"]
-
-    # age v1 out of the horizon -> the deferred expiry completes
-    old_t = _time.time() - 7200
-    for n in os.listdir(path):
-        if n.startswith("_manifest.v"):
-            p = os.path.join(path, n)
-            os.utime(p, (old_t, old_t))
-    dropped2 = expire_partitions(
-        spark, path, keep_days=9, now=dt.date(2024, 1, 20),
-        vacuum_retain_s=3600.0,
-    )
-    assert "day=2024-01-10" in dropped2
-    assert not os.path.isdir(plain10)
-    assert "day=2024-01-10" not in load_manifest(path)
-    left = {str(r.day) for r in read_store(spark, path, "day").collect()}
-    assert left == {"2024-01-11"}
+    assert len(got) == 4 and got["s0-0"] == ["M"] and got["s1-0"] == ["old"]
+    with pytest.raises(FileNotFoundError, match="not found"):
+        read_store(spark, path, "day", version=99)
 
 
-def test_time_travel_to_empty_snapshot_serves_plain_tree(
+def test_day_is_a_string_before_and_after_the_first_manifest_commit(
     spark, tmp_path, manifest_protocol
 ):
-    """ADVICE r6: an EMPTY manifest snapshot is a legitimate committed
-    state (expire_partitions popping every entry writes one) — time
-    travel to it serves the plain tree like the current-state read,
-    while a never-written version still raises."""
-    import datetime as dtm
+    """read_sessions returns `day` as the dir-name string on a plain
+    store and on the same store once compaction gave it a manifest —
+    the column's type does not depend on the commit protocol."""
+    from pyspark.sql import types as T
 
-    from moloch_spark.sources.commit import (
-        PartitionCommitter,
-        manifest_versions,
-        read_store,
-    )
+    from moloch_spark.sources.commit import load_manifest
+    from moloch_spark.sources.session_store import compact_partitions
 
     path = str(tmp_path / "store")
-    rows = [
-        (f"s{d}-{i}", dtm.datetime(2024, 1, 10 + d, 12, i), ["old"])
-        for d in range(3)
-        for i in range(2)
-    ]
-    df = spark.createDataFrame(
-        rows, "session_id string, last_packet timestamp, tags array<string>"
-    )
-    write_sessions(df, path, mode="overwrite")
-    c = PartitionCommitter(path)
-    src = read_store(spark, path, "day").filter(F.col("day") == "2024-01-10")
-    (
-        src.withColumn("tags", F.array(F.lit("M")))
-        .repartition(F.col("day"))
-        .write.partitionBy("day")
-        .parquet(c.staging_dir())
-    )
-    c.commit(["day=2024-01-10"])
-    dropped = expire_partitions(
-        spark, path, keep_days=8, now=dt.date(2024, 1, 19),
-        vacuum_retain_s=3600.0,
-    )
-    assert dropped == ["day=2024-01-10"]
-    v_empty = manifest_versions(path)[-1]
-    got = {
-        str(r.day) for r in read_store(spark, path, "day", version=v_empty).collect()
-    }
-    assert got == {"2024-01-11", "2024-01-12"}
-    import pytest as _pytest
+    for lo in (0, 10):  # two files a day, so compaction rewrites them
+        df = spark.range(lo, lo + 10).select(
+            F.col("id"),
+            F.expr("timestamp '2024-01-10 12:00:00' + make_interval(0, 0, 0, id % 2)")
+            .alias("last_packet"),
+        )
+        write_sessions(df, path, mode="append")
 
-    with _pytest.raises(FileNotFoundError, match="not found"):
-        read_store(spark, path, "day", version=99)
+    def day_type():
+        return read_sessions(spark, path).schema["day"].dataType
+
+    assert day_type() == T.StringType()
+    assert load_manifest(path) is None
+    assert compact_partitions(spark, path) == {"2024-01-10": 1, "2024-01-11": 1}
+    assert load_manifest(path) is not None
+    assert day_type() == T.StringType()
+    days = read_sessions(spark, path).filter(F.col("day") == "2024-01-11")
+    assert days.count() == 10
 
 
 def test_compact_file_stats_through_fs_adapter(spark, tmp_path, monkeypatch):
@@ -688,7 +703,7 @@ def test_expire_dry_run_reports_without_dropping(spark, tmp_path):
     assert planned == ["day=2024-01-10", "day=2024-01-11"]
     # nothing changed: all three days still read
     assert read_store(spark, path, "day").count() == 3
-    assert load_manifest(path) == {}
+    assert load_manifest(path) is None
 
     real = expire_partitions(
         spark, path, keep_days=8, now=dt.date(2024, 1, 20),
@@ -884,7 +899,7 @@ def test_local_append_and_layout_keep_plain_tree(spark, tmp_path):
     assert optimize_layout(spark, path, ["packets"], n_files=2) == [
         "day=2024-01-10", "day=2024-01-11"
     ]
-    assert load_manifest(path) == {}
+    assert load_manifest(path) is None
     assert plain_ids() == want
     got = read_sessions(spark, path).collect()
     assert sorted(r.session_id for r in got) == want

@@ -16,7 +16,7 @@ from hypothesis import strategies as st
 
 from moloch_spark import pyworker
 from moloch_spark.session import default_driver_memory
-from moloch_spark.streaming.sessionizer import SessionRule, sessionize_bucket
+from moloch_spark.streaming.sessionizer import SessionRule, _Session, sessionize_bucket
 
 BASE_US = 1_700_000_000_000_000
 TIMEOUTS = {"tcp": 8, "udp": 3, "icmp": 1}
@@ -168,6 +168,37 @@ def streams(draw):
 def test_bucket_kernel_matches_per_key_replay(batches, chunk_s, ttl_s, n_buckets):
     rule = SessionRule.of(DEFAULT_S, chunk_s, TIMEOUTS, ttl_s)
     assert run_buckets(batches, rule, n_buckets) == replay_per_key(batches, rule)
+
+
+def _restart(sessions: dict) -> dict:
+    """A bucket's sessions through its state row and back, as the
+    applyInPandasWithState function stores and restores them."""
+    row = (list(sessions),) + tuple([getattr(s, f) for s in sessions.values()] for f in _Session.__slots__)
+    return {k: _Session(*rest) for k, *rest in zip(*row)}
+
+
+def test_restart_past_due_session_flushes_after_the_clamped_timer():
+    """After a restart the restored watermark can already be past an
+    open session's due time. A batch whose rows for that key are all
+    late touches the session: its timer is clamped one ms above the
+    watermark, so it survives that batch and a timer pass at that ms,
+    and flushes on the first pass past the clamp, as in the per-key
+    replay."""
+    rule = SessionRule.of(DEFAULT_S, None, TIMEOUTS)
+    wm = BASE_US // 1000 + 20_000  # restored watermark, 12 s past due
+    batches = [
+        ([(1, BASE_US, "tcp", 1.0)], 0, 1_000),
+        ([(1, BASE_US + 1_000, "tcp", 1.0)], wm, 2_000),  # late only
+        ([], wm + 1, 3_000),
+        ([], wm + 2, 4_000),
+    ]
+    sessions, emitted = {}, []
+    for rows, wm_ms, now_ms in batches:
+        sessions = _restart(sessions)
+        out = sessionize_bucket(sessions, _frame(rows) if rows else None, wm_ms=wm_ms, now_ms=now_ms, rule=rule)
+        emitted.append(_canon((k, *_fields(s), o) for k, s, o in out))
+    assert emitted == replay_per_key(batches, rule)[0]
+    assert [len(e) for e in emitted] == [0, 0, 0, 1] and sessions == {}
 
 
 def _zip_with(path, names):

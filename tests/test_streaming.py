@@ -539,34 +539,50 @@ def test_streaming_state_is_bounded_by_open_sessions(spark, events_stream_dir, t
     assert n_open < emitted, (n_open, emitted)
 
 
-@pytest.mark.parametrize("ledger_lost", [False, True])
+@pytest.mark.parametrize(
+    "ledger_lost,manifest",
+    [(False, False), (True, False), (False, True), (True, True)],
+    ids=["False", "True", "manifest-False", "manifest-True"],
+)
 def test_capture_sink_replayed_epoch_is_exactly_once(
-    spark, events_stream_dir, tmp_path, ledger_lost
+    spark, events_stream_dir, tmp_path, request, monkeypatch, ledger_lost, manifest
 ):
     """foreachBatch is at-least-once: a driver that dies after the sink
     wrote the last epoch but before its commits/N entry landed gets
     that epoch again on restart. The store must hold every session
     once — also when the crash came before the epoch ledger recorded
     the append (`ledger_lost`): the re-run then replaces the files its
-    earlier attempt moved."""
+    earlier attempt moved.
+
+    `manifest`: the store already has a manifest, from a compaction
+    between a first drain and the rest, and one epoch that creates a
+    day crashes between its file moves and its entry commit. The
+    unreferenced plain dir stays invisible, and the restarted epoch
+    drops its token-marked files and commits."""
     import glob
     import shutil
 
+    import moloch_spark.sources.commit as commit_mod
     from moloch_spark.sources.session_store import (
+        compact_partitions,
         read_sessions,
         write_sessions_stream,
     )
     from moloch_spark.streaming.ledger import record_epoch
 
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for j, f_ in enumerate(sorted(os.listdir(events_stream_dir))[:4]):
-        dst = os.path.join(src, f_)
-        shutil.copy(os.path.join(events_stream_dir, f_), dst)
-        os.utime(dst, (1_700_000_000 + j, 1_700_000_000 + j))
+    files = sorted(os.listdir(events_stream_dir))[:4]
+
+    def stage(src, names):
+        os.makedirs(src, exist_ok=True)
+        for f_ in names:
+            j = files.index(f_)
+            dst = os.path.join(src, f_)
+            shutil.copy(os.path.join(events_stream_dir, f_), dst)
+            os.utime(dst, (1_700_000_000 + j, 1_700_000_000 + j))
+
     schema = load_table(spark, "events", SF).schema
 
-    def drain(store, ckpt):
+    def drain(src, store, ckpt):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -580,8 +596,11 @@ def test_capture_sink_replayed_epoch_is_exactly_once(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        assert q.exception() is None
+        try:
+            q.awaitTermination(300)
+        except Exception:
+            pass
+        return q.exception()
 
     def stored(store):
         return sorted(
@@ -589,11 +608,36 @@ def test_capture_sink_replayed_epoch_is_exactly_once(
             for r in read_sessions(spark, store).collect()
         )
 
-    clean = str(tmp_path / "clean")
-    drain(clean, str(tmp_path / "clean_ckpt"))
+    clean, clean_src = str(tmp_path / "clean"), str(tmp_path / "clean_src")
+    stage(clean_src, files)
+    assert drain(clean_src, clean, str(tmp_path / "clean_ckpt")) is None
 
-    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
-    drain(store, ckpt)
+    store, ckpt, src = (str(tmp_path / n) for n in ("store", "ckpt", "src"))
+    stage(src, files[:2] if manifest else files)
+    if manifest:
+        request.getfixturevalue("manifest_protocol")
+        assert drain(src, store, ckpt) is None
+        assert compact_partitions(spark, store)
+        assert commit_mod.load_manifest(store) is not None
+        stage(src, files[2:])
+        real = commit_mod.commit_manifest_entries
+        crashed = []
+
+        def crash_before_entry_commit(store_, entries=None, **kw):
+            if not crashed and entries and all(k == v for k, v in entries.items()):
+                crashed.extend(entries)
+                raise RuntimeError("crash between the file moves and the entry commit")
+            return real(store_, entries, **kw)
+
+        monkeypatch.setattr(commit_mod, "commit_manifest_entries", crash_before_entry_commit)
+        assert drain(src, store, ckpt) is not None
+        monkeypatch.setattr(commit_mod, "commit_manifest_entries", real)
+        assert crashed
+        days = {r.day for r in read_sessions(spark, store).select("day").distinct().collect()}
+        for name in crashed:
+            assert os.listdir(os.path.join(store, name))   # moved, unreferenced
+            assert name.split("=", 1)[1] not in days       # and invisible
+    assert drain(src, store, ckpt) is None
     commits = os.path.join(ckpt, "commits")
     last = max(int(n) for n in os.listdir(commits) if n.isdigit())
     os.remove(os.path.join(commits, str(last)))
@@ -602,7 +646,7 @@ def test_capture_sink_replayed_epoch_is_exactly_once(
         os.remove(crc)
     if ledger_lost:
         record_epoch(ckpt, "session_store", last - 1)
-    drain(store, ckpt)  # restart: epoch `last` is delivered again
+    assert drain(src, store, ckpt) is None  # restart: epoch `last` is delivered again
 
     got = stored(store)
     assert len(got) > 0
@@ -610,7 +654,7 @@ def test_capture_sink_replayed_epoch_is_exactly_once(
     assert got == stored(clean)
     # the replayed epoch had sessions to duplicate (its files carry
     # its token)
-    assert glob.glob(os.path.join(store, "day=*", f"*e{last}-*.parquet"))
+    assert glob.glob(os.path.join(store, "**", f"*e{last}-*.parquet"), recursive=True)
 
 
 @pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
