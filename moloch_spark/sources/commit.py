@@ -20,14 +20,15 @@ Portable protocol (manifest mode):
     `_gen` generation, or the partition's own plain dir);
   * a store's partition list is ONE rule: no manifest means the plain
     `name=value` tree; a manifest — even an empty one — means its
-    entries and nothing else. The first manifest commit adopts every
-    plain partition it does not rewrite as an entry pointing at its own
-    dir, and an append that creates a partition commits its entry, so
-    nothing visible before the first commit drops out of the list. A
-    crash between the data write and the manifest swap leaves the
-    manifest — and therefore every reader — on the previous state; the
-    unreferenced dir is a vacuum target, exactly like any MVCC table
-    format.
+    entries and nothing else. The first manifest commit adopts, under
+    the manifest lock, every plain partition it does not rewrite as an
+    entry pointing at its own dir, and an append that creates a
+    partition commits an entry for a dir of its own, so nothing visible
+    before the first commit drops out of the list and a plain dir no
+    entry names is never reused. A crash between the data write and
+    the manifest swap leaves the manifest — and therefore every reader
+    — on the previous state; the unreferenced dir is a vacuum target,
+    exactly like any MVCC table format.
 
 MVCC retention: a commit makes the superseded generation UNREACHABLE
 but does not delete it — a concurrent reader that resolved the old
@@ -59,24 +60,16 @@ the `expected=` base, so it never clobbers a concurrent commit with a
 stale copy — moved entries are skipped, the first commit wins, and the
 skipped partition is reported as not landed.
 
-The store, not the caller, picks the protocol: manifest mode when the
-path is not POSIX or the store has a manifest, the rename swap
-otherwise — a rename-mode swap would be invisible to the readers of a
-manifest (lost update, ADVICE r5), so once a store has a manifest every
-later write goes through it. The local swap is the hardened two-rename
-(ADVICE r4): stale `.old` dirs from a prior crash are recovered on
-entry, a failure between the two renames restores the original
-directory, and first-write partitions (no existing dst) commit with a
-single rename. Appends go through the same committer
-(PartitionCommitter.append) and land in each partition's live
-directory.
+The store, not the caller, picks the protocol (PartitionCommitter):
+the manifest when the path is not POSIX or the store has one — so once
+a store has a manifest every later write goes through it — and the
+hardened two-rename swap (swap_dir) otherwise. Appends go through the
+same committer.
 
 Remaining race: an append and a rewrite of the same partition must not
 overlap — files an append moves into a directory the rewrite has
 already read are dropped when the rewrite lands. Rewrite (compact,
-optimize, tag) closed days only. An append that creates a partition
-whose unreferenced plain dir is still on disk (expired or superseded,
-not yet vacuumed) commits that dir with whatever files are left in it.
+optimize, tag) closed days only.
 """
 
 from __future__ import annotations
@@ -363,17 +356,20 @@ def commit_manifest_entries(
          PUT+read-back sequences complete inside each other's blind
          spot — milliseconds instead of the whole read→PUT span.
 
-    `expected` (every PartitionCommitter rewrite) maps entry -> the
-    data dir the rewrite was BUILT from, with None meaning "the store
-    had no manifest, or no such entry — the entry must still be absent
-    at commit time": an entry whose current manifest value no longer
+    A store with no manifest has the plain tree as its list: the
+    first commit lists it here, under the lock, and adopts every plain
+    partition as `name: name` — so a partition created after a
+    caller's own listing is adopted too, not dropped from the list.
+
+    `expected` (every PartitionCommitter commit) maps entry -> the
+    data dir the caller's data was BUILT from (`name` for a plain
+    partition), with None meaning "no such entry — it must still be
+    absent at commit time": an entry whose current value no longer
     matches is dropped from the commit — a concurrent commit landed
     while we were rewriting stale data, and it wins (our copy becomes
-    an unreferenced generation for vacuum). Without the None form, a
-    rewrite of a plain-tree partition would pass unconditionally and
-    clobber an update that manifest-committed that name mid-rewrite.
-    Two racing tag write-backs of one day therefore keep the first to
-    commit; the second reports the day as not landed.
+    an unreferenced generation for vacuum). Two racing tag write-backs
+    of one day therefore keep the first to commit; the second reports
+    the day as not landed.
 
     Returns the manifest as last read back. Raises RuntimeError when
     `max_attempts` read-backs in a row saw foreign interference (a
@@ -385,7 +381,9 @@ def commit_manifest_entries(
     lock = _acquire_manifest_lock(fs, root)
     try:
         for attempt in range(max_attempts):
-            cur = load_manifest(store, spark) or {}
+            cur = load_manifest(store, spark)
+            if cur is None:
+                cur = {n: n for n in _plain_dirs(fs, root)}
             if expected:
                 # a concurrent commit moved these entries past our read
                 # base: their data is newer than our rewrite — drop ours
@@ -532,13 +530,9 @@ def read_store(
         if partition_col is None or n.split("=", 1)[0] == partition_col
     }
     if not parts:
+        col = f" for column {partition_col!r}" if partition_col else ""
         raise FileNotFoundError(
-            f"store {store!r} has a manifest but no partition resolves"
-            + (
-                f" for partition column {partition_col!r}"
-                if partition_col
-                else ""
-            )
+            f"store {store!r} has a manifest but no partition resolves{col}"
         )
     return _read_partitions(spark, parts)
 
@@ -587,11 +581,10 @@ class PartitionCommitter:
 
     def commit(self, partitions: list[str]) -> list[str]:
         """Replace `partitions` with their staged rewrite; returns the
-        ones that landed. In manifest mode the expected= base is this
-        committer's manifest read: a partition a concurrent commit moved
-        since then keeps that commit, and is left out of the result. The
-        first manifest commit of a store also adopts every other plain
-        partition as an entry pointing at its own dir."""
+        ones that landed. In manifest mode the expected= base is the
+        partition list this committer read: a partition a concurrent
+        commit moved since then keeps that commit, and is left out of
+        the result."""
         missing = [
             p
             for p in partitions
@@ -610,13 +603,13 @@ class PartitionCommitter:
             ours = {
                 p: posixpath.join("_gen", self.token, p) for p in partitions
             }
-            # the store's first manifest commit adopts its plain tree
-            adopt = {n: n for n in self.parts} if self.manifest is None else {}
-            base = self.manifest or {}
+            base = self.manifest
+            if base is None:  # the plain tree: each partition its own dir
+                base = {n: n for n in self.parts}
             final = commit_manifest_entries(
                 self.store,
-                adopt | ours,
-                expected={p: base.get(p) for p in adopt | ours},
+                ours,
+                expected={p: base.get(p) for p in ours},
                 spark=self._spark,
             )
             return [p for p in partitions if final.get(p) == ours[p]]
@@ -630,10 +623,13 @@ class PartitionCommitter:
 
     def append(self) -> None:
         """Move the staged files into each partition's live directory as
-        this committer resolved it — the plain dir, or its manifest
-        generation; a new partition gets a plain dir — then, on a store
-        with a manifest, commit an entry for each new partition, and
-        remove the staging.
+        this committer resolved it, then remove the staging. A new
+        partition gets its plain dir or, on a store with a manifest, a
+        dir of its own (`_gen/<token>.a/<name>`: a plain dir no entry
+        names may still hold expired rows). In manifest mode the new
+        partitions' entries are then committed — a no-op while the store
+        has no manifest — and a partition a concurrent append committed
+        first takes this one's files into its dir.
 
         Each moved file is renamed `<token>-<name>`, and files already
         carrying the token are dropped from the target dir first: an
@@ -641,36 +637,53 @@ class PartitionCommitter:
         whose earlier attempt crashed mid-move, or before its entry
         commit) replaces that attempt instead of duplicating it,
         provided it writes the same partitions, as a deterministic
-        replay does. Until its entry commits, a new partition of a
-        manifest store is invisible. Files added to an existing
-        partition are not versioned: time travel through an older
-        manifest snapshot that names the partition sees them too."""
-        fs, mark = self._fs, f"{self.token}-"
-        new = []
-        for name in fs.listdir(self._staging):
+        replay does. Files added to an existing partition are not
+        versioned: time travel through an older snapshot that names the
+        partition sees them too."""
+        created = {}
+        for name in self._fs.listdir(self._staging):
             if "=" not in name or name.startswith(("_", ".")):
                 continue
-            src = posixpath.join(self._staging, name)
-            if name not in self.parts:
-                new.append(name)
-            dst = self.parts.get(name) or posixpath.join(self.store, name)
-            fs.mkdirs(dst)
-            for f in fs.listdir(dst):
-                if f.startswith(mark):
-                    fs.delete(posixpath.join(dst, f))
-            for f in fs.listdir(src):
-                if not f.startswith(("_", ".")):
-                    fs.rename(
-                        posixpath.join(src, f), posixpath.join(dst, mark + f)
-                    )
-        if self.manifest is not None and new:
-            commit_manifest_entries(
+            dst = self.parts.get(name)
+            if dst is None:
+                rel = name
+                if self.manifest is not None:
+                    rel = posixpath.join("_gen", f"{self.token}.a", name)
+                if self.manifest_mode:
+                    created[name] = rel
+                dst = posixpath.join(self.store, rel)
+            self._move(posixpath.join(self._staging, name), dst)
+        if created:
+            final = commit_manifest_entries(
                 self.store,
-                {n: n for n in new},
-                expected=dict.fromkeys(new),
+                created,
+                expected=dict.fromkeys(created),
                 spark=self._spark,
             )
-        fs.delete(self._staging)
+            for name, rel in created.items():
+                # None: an expiry removed the day meanwhile, and wins
+                if final.get(name) not in (rel, None):
+                    self._move(
+                        posixpath.join(self.store, rel),
+                        posixpath.join(self.store, final[name]),
+                    )
+        self._fs.delete(self._staging)
+
+    def _move(self, src: str, dst: str) -> None:
+        """Move this append's files from `src` into `dst`, dropping the
+        ones an earlier attempt under the token left in `dst`. Out of
+        the staging every file moves; out of a dir other writers may
+        share, only the token's own."""
+        fs, mark = self._fs, f"{self.token}-"
+        staged = src.startswith(self._staging + "/")
+        fs.mkdirs(dst)
+        for f in fs.listdir(dst):
+            if f.startswith(mark):
+                fs.delete(posixpath.join(dst, f))
+        for f in fs.listdir(src):
+            if f.startswith(mark) or (staged and not f.startswith(("_", "."))):
+                to = f if f.startswith(mark) else mark + f
+                fs.rename(posixpath.join(src, f), posixpath.join(dst, to))
 
 
 def swap_dir(src: str, dst: str) -> None:
@@ -745,10 +758,12 @@ def vacuum_store(
       3. on a store with a manifest, a plain `name=value` dir is
          reclaimed like a `_gen` token by the same two rules: the
          partition an expiry removed goes when the last snapshot that
-         names it does, and one no retained state names (superseded by
-         the first manifest commit, or an append that crashed before
-         its entry commit) goes past the orphan grace. Without a
-         manifest the plain tree is the store and is never touched;
+         names it does, and one no retained state names (the first
+         manifest commit rewrote it, so no snapshot ever named it)
+         goes past the orphan grace, aged from the later of its own
+         mtime and the oldest retained snapshot — it was superseded
+         no earlier than that. Without a manifest the plain tree is
+         the store and is never touched;
       4. `.tmp-` staging residue from crashed atomic puts at the store
          root is swept on the same orphan grace.
 
@@ -772,13 +787,12 @@ def vacuum_store(
     current = json.dumps({"partitions": manifest}, sort_keys=True)
     entries = _snapshot_entries(fs, root)
     paths = {n: posixpath.join(root, n) for _, n in entries}
-    bodies = {n: fs.read_text(paths[n]) for _, n in entries}
+    bodies = {n: fs.read_text(p) for n, p in paths.items()}
+    mtimes = {n: fs.mtime(p) for n, p in paths.items()}
     # supersession chain ordered by (mtime, version, name): mtime is the
     # authoritative commit order — version-claim collisions can leave
     # two snapshot files carrying the same version number (ADVICE r6)
-    chain = sorted(
-        entries, key=lambda e: (fs.mtime(paths[e[1]]), e[0], e[1])
-    )
+    chain = sorted(entries, key=lambda e: (mtimes[e[1]], e[0], e[1]))
     surviving: list[str] = []
     reclaimed_refs: set[str] = set()
     for i, (_v, name) in enumerate(chain):
@@ -786,12 +800,12 @@ def vacuum_store(
             surviving.append(name)
             continue  # the live state — always retained
         if i + 1 < len(chain):
-            superseded_at = fs.mtime(paths[chain[i + 1][1]])
+            superseded_at = mtimes[chain[i + 1][1]]
             gate = retain_s
         else:
             # newest-but-not-current: suspected orphan or in-flight
             # writer — age on its own mtime with the hard grace floor
-            superseded_at = fs.mtime(paths[name])
+            superseded_at = mtimes[name]
             gate = max(retain_s, ORPHAN_COMMIT_GRACE_S)
         if now - superseded_at < gate:
             surviving.append(name)
@@ -828,6 +842,7 @@ def vacuum_store(
     ]
     if manifest is not None:
         units += _plain_dirs(fs, root)
+    plain_since = min((mtimes[n] for n in surviving), default=now)
     for unit in units:
         udir = posixpath.join(root, unit)
         if unit not in live_units:
@@ -839,10 +854,12 @@ def vacuum_store(
             # a committer between staging_dir() and commit() would have
             # its staging deleted mid-write; real crash residue
             # reclaims once it outlives the grace)
-            if unit not in reclaimed_refs and (
-                now - fs.mtime(udir) < max(retain_s, ORPHAN_COMMIT_GRACE_S)
-            ):
-                continue
+            if unit not in reclaimed_refs:
+                born = fs.mtime(udir)
+                if not unit.startswith("_gen/"):
+                    born = max(born, plain_since)
+                if now - born < max(retain_s, ORPHAN_COMMIT_GRACE_S):
+                    continue
             _delete(udir)
             removed.append(unit)
             continue

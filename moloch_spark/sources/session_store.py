@@ -49,10 +49,10 @@ def write_sessions(
     `mode="append"` goes through the store's committer
     (sources/commit.PartitionCommitter.append): the files are staged
     under `_gen/<token>` and moved into each day's live directory as
-    the store resolves it; on a store with a manifest, a day the append
-    creates lands with one manifest commit of its entry. Any other mode
-    is one plain Spark write of the whole store (`"overwrite"` builds it
-    afresh).
+    the store resolves it; in manifest mode, a day the append creates
+    lands in a dir of its own with one manifest commit of its entry.
+    Any other mode is one plain Spark write of the whole store
+    (`"overwrite"` builds it afresh).
     """
     if mode == "append":
         _append(sessions, path, ts_col)

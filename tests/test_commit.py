@@ -276,7 +276,8 @@ def test_manifest_store_is_exactly_its_manifest(
     rewrite; after it, a plain `day=` dir the manifest does not name is
     never read — not by read_store, not by PartitionCommitter.parts, not
     by expire_partitions — and opening the store does not list its
-    root. vacuum_store reclaims such a dir past the orphan grace."""
+    root. vacuum_store reclaims such a dir once it and the retained
+    snapshots are older than the orphan grace."""
     from moloch_spark.sources import fs as fs_mod
     from moloch_spark.sources.commit import ORPHAN_COMMIT_GRACE_S
     from moloch_spark.sources.session_store import (
@@ -292,8 +293,8 @@ def test_manifest_store_is_exactly_its_manifest(
         "day=2024-03-02": f"_gen/{t1}/day=2024-03-02",
         "day=2024-03-03": "day=2024-03-03",
     }
-    # a stray plain day the manifest does not name (as a crashed append
-    # leaves one), older than every listed day
+    # a stray plain day the manifest does not name (as a writer that
+    # did not see the manifest leaves one), older than every listed day
     stray = spark.createDataFrame(
         [("stray", dt.datetime(2024, 2, 1, 12), ["x"])],
         "session_id string, last_packet timestamp, tags array<string>",
@@ -324,10 +325,14 @@ def test_manifest_store_is_exactly_its_manifest(
     ) == []
     assert os.path.isdir(stray_dir)
     monkeypatch.setattr(fs_mod.LocalFS, "listdir", real_listdir)
-    # unreferenced: young, it may be an in-flight append; old, it goes
-    assert "day=2024-02-01" not in vacuum_store(path)
+    # unreferenced: young, it may be an in-flight write, and it was
+    # superseded no earlier than the oldest retained snapshot
     old = time.time() - 2 * ORPHAN_COMMIT_GRACE_S
     os.utime(stray_dir, (old, old))
+    assert "day=2024-02-01" not in vacuum_store(path)
+    for n in os.listdir(path):
+        if n.startswith("_manifest.v"):
+            os.utime(os.path.join(path, n), (old, old))
     assert "day=2024-02-01" in vacuum_store(path)
     assert not os.path.isdir(stray_dir)
     assert len(_store_rows(spark, path)) == 9
@@ -351,7 +356,8 @@ def test_append_of_a_new_day_is_a_manifest_commit(
         "session_id string, last_packet timestamp, tags array<string>",
     )
     write_sessions(new, path, mode="append")
-    assert load_manifest(path)["day=2024-03-05"] == "day=2024-03-05"
+    rel = load_manifest(path)["day=2024-03-05"]
+    assert rel.startswith("_gen/") and rel.endswith(".a/day=2024-03-05")
     v1_, v2 = manifest_versions(path)
     assert v1_ == v1
     at = {
@@ -361,6 +367,152 @@ def test_append_of_a_new_day_is_a_manifest_commit(
     assert "n-0" in at[v2] and "n-0" not in at[v1]
     assert at[v2] - {"n-0"} == at[v1]
     assert _store_rows(spark, path)["n-0"] == ["new"]
+
+
+def _append_committer(spark, path, rows):
+    """A committer with `rows` (session_id, last_packet) staged as an
+    append; the caller runs its append()."""
+    c = PartitionCommitter(path, spark=spark)
+    (
+        spark.createDataFrame(rows, "session_id string, last_packet timestamp")
+        .withColumn("tags", F.array(F.lit("new")))
+        .withColumn("day", F.date_format("last_packet", "yyyy-MM-dd"))
+        .write.partitionBy("day")
+        .parquet(c.staging_dir())
+    )
+    return c
+
+
+@pytest.mark.parametrize("when", ["before", "between", "after"])
+def test_append_racing_the_first_manifest_commit_is_named(
+    spark, tmp_path, monkeypatch, manifest_protocol, when
+):
+    """An append that creates a day, built while the store has no
+    manifest, and the store's first manifest commit (a rewrite of
+    another day) built at the same time: whether the rewrite commits
+    before the append's file moves, between its moves and its entry
+    commit, or after the whole append, the new day is in the manifest
+    and read."""
+    import moloch_spark.sources.commit as C
+
+    path = str(tmp_path / "store")
+    _mk_store(spark, path)
+    app = _append_committer(spark, path, [("n-0", dt.datetime(2024, 3, 9, 12))])
+    rw = PartitionCommitter(path, spark=spark)
+    (
+        read_store(spark, path, "day")
+        .filter(F.col("day") == "2024-03-02")
+        .withColumn("tags", F.array(F.lit("rw")))
+        .write.partitionBy("day")
+        .parquet(rw.staging_dir())
+    )
+    if when == "before":
+        assert rw.commit(["day=2024-03-02"]) == ["day=2024-03-02"]
+    real = C.commit_manifest_entries
+
+    def first_commit_lands_now(store, entries=None, **kw):
+        if "day=2024-03-09" in (entries or {}):
+            assert rw.commit(["day=2024-03-02"]) == ["day=2024-03-02"]
+        return real(store, entries, **kw)
+
+    if when == "between":
+        monkeypatch.setattr(C, "commit_manifest_entries", first_commit_lands_now)
+    app.append()
+    monkeypatch.setattr(C, "commit_manifest_entries", real)
+    if when == "after":
+        assert rw.commit(["day=2024-03-02"]) == ["day=2024-03-02"]
+    manifest = load_manifest(path)
+    assert manifest["day=2024-03-09"] == "day=2024-03-09"
+    assert manifest["day=2024-03-02"] == f"_gen/{rw.token}/day=2024-03-02"
+    rows = _store_rows(spark, path)
+    assert len(rows) == 10 and rows["n-0"] == ["new"]
+    assert rows["s1-0"] == ["rw"] and rows["s0-0"] == ["old"]
+
+
+def test_racing_first_commits_of_different_days_both_land(
+    spark, tmp_path, manifest_protocol
+):
+    """Two rewrites built on the plain tree: the first to commit adopts
+    the other's day as its plain dir, which is the data the second
+    rewrite read, so the second lands too."""
+    path = str(tmp_path / "store")
+    _mk_store(spark, path)
+    cs = {}
+    for day in ("2024-03-01", "2024-03-02"):
+        cs[day] = PartitionCommitter(path, spark=spark)
+        (
+            read_store(spark, path, "day")
+            .filter(F.col("day") == day)
+            .withColumn("tags", F.array(F.lit(day)))
+            .write.partitionBy("day")
+            .parquet(cs[day].staging_dir())
+        )
+    for day, c in cs.items():
+        assert c.commit([f"day={day}"]) == [f"day={day}"]
+    rows = _store_rows(spark, path)
+    assert rows["s0-0"] == ["2024-03-01"] and rows["s1-0"] == ["2024-03-02"]
+    assert rows["s2-0"] == ["old"] and len(rows) == 9
+
+
+def test_late_append_after_expiry_reads_only_the_new_rows(
+    spark, tmp_path, manifest_protocol
+):
+    """Append a day twice, compact it (the store's first manifest
+    commit supersedes its plain dir), expire it, then append one late
+    session to it: the superseded plain dir is still on disk, and only
+    the late session is read for that day."""
+    from moloch_spark.sources.session_store import (
+        compact_partitions,
+        expire_partitions,
+        read_sessions,
+        write_sessions,
+    )
+
+    path = str(tmp_path / "store")
+    schema = "session_id string, last_packet timestamp"
+    for lo in (0, 3):
+        rows = [(f"s{i}", dt.datetime(2024, 3, 1, 12, i)) for i in range(lo, lo + 3)]
+        rows.append((f"k{lo}", dt.datetime(2024, 3, 20, 12, lo)))
+        write_sessions(spark.createDataFrame(rows, schema), path, mode="append")
+    assert load_manifest(path) is None
+    assert compact_partitions(spark, path)["2024-03-01"] == 1
+    assert expire_partitions(
+        spark, path, keep_days=10, now=dt.date(2024, 3, 20)
+    ) == ["day=2024-03-01"]
+    assert os.listdir(os.path.join(path, "day=2024-03-01"))
+    late = spark.createDataFrame([("late", dt.datetime(2024, 3, 1, 13))], schema)
+    write_sessions(late, path, mode="append")
+    got = sorted(
+        (r.day, r.session_id) for r in read_sessions(spark, path).collect()
+    )
+    assert got == [("2024-03-01", "late"), ("2024-03-20", "k0"), ("2024-03-20", "k3")]
+
+
+def test_first_commit_supersession_is_dated_by_the_snapshot(
+    spark, tmp_path, manifest_protocol
+):
+    """A plain dir the first manifest commit rewrites is named by no
+    snapshot; vacuum ages it from the oldest retained snapshot, not
+    from its own mtime, so an hours-old day outlives the first
+    compaction for the retention horizon."""
+    from moloch_spark.sources.commit import ORPHAN_COMMIT_GRACE_S
+
+    path = str(tmp_path / "store")
+    _mk_store(spark, path)
+    old = time.time() - 4 * 3600
+    for n in os.listdir(path):
+        os.utime(os.path.join(path, n), (old, old))
+    _tag_day2(spark, path, "gen1")
+    plain = os.path.join(path, "day=2024-03-02")
+    assert vacuum_store(path, retain_s=3600.0) == []
+    assert vacuum_store(path) == []
+    assert os.path.isdir(plain)
+    aged = time.time() - 2 * ORPHAN_COMMIT_GRACE_S
+    for n in _snapshot_names(path):
+        os.utime(os.path.join(path, n), (aged, aged))
+    assert vacuum_store(path, retain_s=3600.0) == []
+    assert vacuum_store(path) == ["day=2024-03-02"]
+    assert _store_rows(spark, path)["s1-0"] == ["gen1"]
 
 
 def test_update_tags_partitioned_manifest_mode(

@@ -315,12 +315,12 @@ def test_update_tags_bucketed_no_shuffle_roundtrip(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_tags_bk__staged")
 
 
-def _two_day_store(spark, path, ndays=2):
+def _two_day_store(spark, path):
     import datetime as dtm
 
     rows = [
         (f"s{d}-{i}", dtm.datetime(2024, 1, 10 + d, 12, i), ["old"])
-        for d in range(ndays)
+        for d in range(2)
         for i in range(2)
     ]
     df = spark.createDataFrame(
@@ -768,10 +768,10 @@ def test_compaction_yields_to_concurrent_update(
 def test_compaction_yields_when_plain_day_gets_committed(
     spark, tmp_path, monkeypatch, manifest_protocol
 ):
-    """The expected-absent form (review r7 #2): a day resolved from the
+    """The plain-base form (review r7 #2): a day resolved from the
     PLAIN tree at compaction start that a concurrent writer
     manifest-commits mid-rewrite is NOT clobbered — expected={name:
-    None} detects the appearance."""
+    name}, the plain dir the compaction read, detects the move."""
     import moloch_spark.sources.commit as C
     from moloch_spark.sources.commit import (
         PartitionCommitter,
@@ -789,7 +789,7 @@ def test_compaction_yields_when_plain_day_gets_committed(
 
     def interfering(store, entries=None, **kw):
         exp = kw.get("expected") or {}
-        if hit["n"] == 0 and None in exp.values():
+        if hit["n"] == 0 and exp.get("day=2024-01-01") == "day=2024-01-01":
             hit["n"] += 1
             upd = PartitionCommitter(store)
             spark.range(7).selectExpr(

@@ -556,9 +556,10 @@ def test_capture_sink_replayed_epoch_is_exactly_once(
 
     `manifest`: the store already has a manifest, from a compaction
     between a first drain and the rest, and one epoch that creates a
-    day crashes between its file moves and its entry commit. The
-    unreferenced plain dir stays invisible, and the restarted epoch
-    drops its token-marked files and commits."""
+    day crashes between moving its files into the day's own
+    `_gen/<token>.a` dir and its entry commit. That unreferenced dir
+    stays invisible, and the restarted epoch drops its token-marked
+    files there and commits."""
     import glob
     import shutil
 
@@ -621,11 +622,11 @@ def test_capture_sink_replayed_epoch_is_exactly_once(
         assert commit_mod.load_manifest(store) is not None
         stage(src, files[2:])
         real = commit_mod.commit_manifest_entries
-        crashed = []
+        crashed = {}
 
         def crash_before_entry_commit(store_, entries=None, **kw):
-            if not crashed and entries and all(k == v for k, v in entries.items()):
-                crashed.extend(entries)
+            if not crashed and entries and all(".a/" in v for v in entries.values()):
+                crashed.update(entries)
                 raise RuntimeError("crash between the file moves and the entry commit")
             return real(store_, entries, **kw)
 
@@ -634,8 +635,8 @@ def test_capture_sink_replayed_epoch_is_exactly_once(
         monkeypatch.setattr(commit_mod, "commit_manifest_entries", real)
         assert crashed
         days = {r.day for r in read_sessions(spark, store).select("day").distinct().collect()}
-        for name in crashed:
-            assert os.listdir(os.path.join(store, name))   # moved, unreferenced
+        for name, rel in crashed.items():
+            assert os.listdir(os.path.join(store, rel))    # moved, unreferenced
             assert name.split("=", 1)[1] not in days       # and invisible
     assert drain(src, store, ckpt) is None
     commits = os.path.join(ckpt, "commits")
