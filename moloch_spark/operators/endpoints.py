@@ -385,29 +385,6 @@ def connections(
     return out
 
 
-def connections_nodes(edges: DataFrame) -> DataFrame:
-    """Node list from an edge table: union endpoints, type bitmask 1=src
-    2=dst (apiConnections.js:237-263)."""
-    srcs = edges.select(
-        F.col("src").alias("node"), F.col("sessions"), F.lit(1).alias("type")
-    )
-    dsts = edges.select(
-        F.col("dst").alias("node"), F.col("sessions"), F.lit(2).alias("type")
-    )
-    return (
-        srcs.unionByName(dsts)
-        .groupBy("node")
-        .agg(
-            F.sum("sessions").alias("sessions"),
-            # bitwise OR of 1/2 flags == presence as src / dst / both
-            F.max(F.when(F.col("type") == 1, 1).otherwise(0)).alias("_s"),
-            F.max(F.when(F.col("type") == 2, 2).otherwise(0)).alias("_d"),
-        )
-        .withColumn("type", F.col("_s") + F.col("_d"))
-        .drop("_s", "_d")
-    )
-
-
 def connections_baseline(
     df: DataFrame,
     src: str,

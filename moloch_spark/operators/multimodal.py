@@ -436,16 +436,6 @@ def synth_wav_media(docs: DataFrame, *, rate: int = 8000) -> DataFrame:
     return docs.select("doc_id").mapInPandas(fn, schema=MEDIA_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Back-compat alias from when pixel resample was stubbed — now real."""
-    return resize_images(media, width, height)
-
-
-def frame_sample_stub(media: DataFrame, every_n: int) -> DataFrame:
-    """Back-compat alias from when frame sampling was stubbed — now real."""
-    return frame_sample(media, every_n)
-
-
 # ---------------------------------------------------------------------------
 # Perceptual-hash image dedup (the LAION-style image-native dedup rung:
 # ref analog is content dedup generally — moloch has no image corpus —

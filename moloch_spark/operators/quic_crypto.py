@@ -168,15 +168,6 @@ def aes128_ctr(rk: list[int], initial_counter: bytes, data: bytes) -> bytes:
 _R = 0xE1 << 120
 
 
-def _gf128_mul(x: int, y: int) -> int:
-    z, v = 0, y
-    for i in range(127, -1, -1):
-        if (x >> i) & 1:
-            z ^= v
-        v = (v >> 1) ^ (_R if v & 1 else 0)
-    return z
-
-
 def _ghash(h: int, aad: bytes, ct: bytes) -> bytes:
     """GHASH with the H·x^i ladder hoisted out of the per-block loop:
     the 128 doubling steps depend only on H, so per block the multiply

@@ -7,26 +7,33 @@ Reference semantics (SURVEY.md §1.4, §2.2):
     (capture/session.c:312-357, capture/db.c:579-596)
   * per-session accumulators -> one wide row (capture/db.c:472-1100)
 
-Spark shape: a lag/cumsum window assigns session instance ids per key
-(an idle gap > timeout starts a new session), a second window chunks long
-sessions, then ONE groupBy produces the wide session row.
+Spark shape: Spark computes the sessionizer kernel's inputs (epoch µs,
+the per-row idle timeout, the value as an exact decimal), one hash
+shuffle on the session key brings each key's rows together, sorted by
+event time inside the partition, and the capture pipeline's own kernel
+(``streaming.sessionizer.sessionize_bucket``) runs over each
+partition's Arrow batches in order. Batch is thus the stream with every
+row in one batch — the stream replayed in event-time order — and the
+kernel is the only code that decides an idle close, a chunk boundary
+or a byte sum. A projection turns its chunk records into the wide
+session row.
 
-Scale: both windows partition by the session key, so they ride the same
-hash shuffle as the final aggregation. No driver state; skewed keys are
-handled by AQE. This is the batch (backfill) path — the streaming path
-with true per-proto timeouts lives in moloch_spark.streaming.
+Scale: nothing is collected; a task holds one Arrow batch plus the
+open session of the key the batch ended on. Skewed keys are handled
+by AQE.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
+from functools import partial
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from moloch_spark.operators.endpoints import dsum
 from moloch_spark.operators.timeutil import epoch_ms_fn, epoch_us_fn
+from moloch_spark.streaming.sessionizer import CHUNK_SCHEMA, SessionRule, replay_sorted
 
 
 def timeout_by_protocol(
@@ -44,61 +51,32 @@ def timeout_by_protocol(
     return out.otherwise(default_s) if out is not None else F.lit(default_s)
 
 
-def assign_sessions(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    *,
-    idle_timeout_s: int | Column = 1800,
-    chunk_s: int | None = None,
-) -> DataFrame:
-    """Add session_seq / root / chunk columns.
+def kernel_input(df: DataFrame, idle_timeout_s: int | Column) -> list[Column]:
+    """The kernel's input columns over ``df`` (ts, user_id, event_type,
+    value; no NULL ts), for the batch and the streaming sessionizer.
 
-    A new session starts when the gap to the previous event on the same
-    key exceeds ``idle_timeout_s`` (capture/session.c idle close) —
-    either a constant or a per-row column (use timeout_by_protocol for
-    moloch's per-proto timeouts). If ``chunk_s`` is set, a session is
-    additionally split into chunks of that many seconds from its own
-    start — the mid-save behavior (capture/session.c:312-357); all
-    chunks keep the same ``root_seq``.
-
-    Contract: an event without a timestamp cannot enter time-ordered
-    session analytics — NULL-ts rows are dropped here (the capture
-    path guarantees packet times; a 100 TB event lake does not), so
-    gap/window math never sees a NULL and the two engines' opposite
-    NULL-ordering defaults (Spark NULLS FIRST vs SQL NULLS LAST)
-    can never diverge.
-    """
-    df = df.filter(F.col(ts_col).isNotNull())
-    keys = [F.col(k) for k in key_cols]
-    w = Window.partitionBy(*keys).orderBy(F.col(ts_col), F.monotonically_increasing_id())
-    # microsecond epoch diff, the streaming sessionizer's unit: exact
-    # integer math (unix_millis truncates, so a gap less than 1 ms over
-    # the timeout would close a session only in the stream). The
-    # converter branches on the actual ts dtype — a vanilla session
-    # reads the fixtures as TIMESTAMP_NTZ, get_spark's as TIMESTAMP; a
-    # long column stays epoch ms.
-    to_us = _epoch_us_fn(df, ts_col)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    gap = to_us(F.col(ts_col)) - to_us(prev_ts)
-    timeout_us = (
-        F.lit(idle_timeout_s * 1_000_000)
-        if isinstance(idle_timeout_s, int)
-        else idle_timeout_s.cast("long") * 1_000_000
-    )
-    is_new = F.when(prev_ts.isNull() | (gap > timeout_us), 1).otherwise(0)
-    out = df.withColumn("_new", is_new).withColumn(
-        "root_seq", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    ).drop("_new")
-    if chunk_s is None:
-        return out.withColumn("session_seq", F.col("root_seq"))
-    ws = Window.partitionBy(*keys, F.col("root_seq"))
-    start = F.min(F.col(ts_col)).over(ws)
-    chunk = F.floor((to_us(F.col(ts_col)) - to_us(start)) / F.lit(chunk_s * 1_000_000))
-    return out.withColumn("chunk_seq", chunk).withColumn(
-        "session_seq",
-        F.concat_ws("-", F.col("root_seq").cast("string"), F.col("chunk_seq").cast("string")),
-    )
+    Times are epoch microseconds, the streaming sessionizer's unit:
+    exact integer math (unix_millis truncates, so a gap less than 1 ms
+    over the timeout would close a session on one path only). The
+    converter branches on the actual ts dtype — a vanilla session reads
+    the fixtures as TIMESTAMP_NTZ, get_spark's as TIMESTAMP; a long
+    column stays epoch ms. The key and the value come with NULL flags:
+    the pandas form of a nullable long is float64, which would round
+    them. The value is the unscaled decimal(18,4) long that ``dsum``
+    sums, so the kernel's byte sum is exact."""
+    to_us = _epoch_us_fn(df, "ts")
+    uid = F.col("user_id")
+    timeout = F.lit(idle_timeout_s) if isinstance(idle_timeout_s, int) else idle_timeout_s
+    value = (F.col("value").cast("decimal(18,4)") * 10_000).cast("long")
+    return [
+        to_us(F.col("ts")).alias("ts_us"),
+        F.coalesce(uid.cast("long"), F.lit(0)).alias("user_id"),
+        uid.isNull().alias("key_null"),
+        "event_type",
+        (timeout.cast("long") * 1000).alias("timeout_ms"),
+        F.coalesce(value, F.lit(0)).alias("value"),
+        value.isNull().alias("value_null"),
+    ]
 
 
 def _epoch_us_fn(df: DataFrame, ts_col: str) -> Callable[[Column], Column]:
@@ -109,40 +87,69 @@ def _epoch_us_fn(df: DataFrame, ts_col: str) -> Callable[[Column], Column]:
     return epoch_us_fn(df, ts_col)
 
 
+def _from_epoch_us_fn(df: DataFrame, ts_col: str) -> Callable[[Column], Column]:
+    """The inverse of _epoch_us_fn: epoch microseconds back to
+    ``ts_col``'s dtype (NTZ as the UTC wall clock, tz-independent)."""
+    dt = df.schema[ts_col].dataType
+    if isinstance(dt, (T.LongType, T.IntegerType)):
+        return lambda c: (c / 1000).cast(dt)  # whole ms: the division is exact
+    if isinstance(dt, T.TimestampNTZType):
+        epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
+        return lambda c: F.timestamp_add("MICROSECOND", c, epoch)
+    return F.timestamp_micros
+
+
 def sessionize_events(
     df: DataFrame,
     *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    idle_timeout_s: int = 1800,
+    idle_timeout_s: int | Column = 1800,
     chunk_s: int | None = None,
-    type_col: str = "event_type",
-    value_col: str = "value",
 ) -> DataFrame:
-    """Events -> wide session table (the driver's generic `events` schema).
+    """Events (ts, user_id, event_type, value — the generic `events`
+    table) -> wide session table.
+
+    A new session starts when the gap to the previous event on the same
+    key exceeds that event's ``idle_timeout_s`` (capture/session.c idle
+    close) — a constant or a per-row column (timeout_by_protocol gives
+    moloch's per-proto timeouts). If ``chunk_s`` is set, a session is
+    additionally cut into chunks on a chunk_s grid from its own start —
+    the mid-save behavior (capture/session.c:312-357); all chunks keep
+    the same ``root_seq`` and ``session_seq`` is ``root-grid index``.
 
     Output mirrors moloch_db_save_session's fixed columns
     (capture/db.c:472-1100): first/last packet, duration, per-session
     counters, set-semantics multivalue field + its Cnt companion
     (capture/field.c:488-600 dedup-on-insert; the Cnt column rule is
     SURVEY §1.2).
+
+    Contract: an event without a timestamp cannot enter time-ordered
+    session analytics — NULL-ts rows are dropped here (the capture
+    path guarantees packet times; a 100 TB event lake does not).
     """
-    with_ids = assign_sessions(
-        df, [key_col], ts_col, idle_timeout_s=idle_timeout_s, chunk_s=chunk_s
+    df = df.filter(F.col("ts").isNotNull())
+    rule = SessionRule.of(chunk_s)
+    chunks = (
+        df.select(*kernel_input(df, idle_timeout_s))
+        .repartition("user_id")
+        .sortWithinPartitions("key_null", "user_id", "ts_us")
+        .mapInPandas(partial(replay_sorted, rule=rule), CHUNK_SCHEMA)
     )
-    grp = [F.col(key_col), F.col("session_seq")]
-    if chunk_s is not None:
-        root_agg = [F.first("root_seq").alias("root_seq")]
+    if chunk_s is None:
+        seq = [F.col("root_seq").alias("session_seq")]
     else:
-        root_agg = []
-    out = with_ids.groupBy(*grp).agg(
-        *root_agg,
-        F.min(ts_col).alias("first_packet"),
-        F.max(ts_col).alias("last_packet"),
-        F.count(F.lit(1)).alias("packets"),
-        dsum(value_col, "tot_bytes"),
-        F.array_sort(F.collect_set(type_col)).alias("event_types"),
-        F.size(F.collect_set(type_col)).cast("long").alias("event_types_cnt"),
+        grid = F.expr(f"(first_us - root_us) div {rule.chunk_us}")
+        seq = [F.concat_ws("-", F.col("root_seq").cast("string"), grid.cast("string")).alias("session_seq"),
+               "root_seq"]
+    from_us = _from_epoch_us_fn(df, "ts")
+    out = chunks.select(
+        F.col("user_id").cast(df.schema["user_id"].dataType).alias("user_id"),
+        *seq,
+        from_us(F.col("first_us")).alias("first_packet"),
+        from_us(F.col("last_us")).alias("last_packet"),
+        "packets",
+        "tot_bytes",
+        "event_types",
+        F.size("event_types").cast("long").alias("event_types_cnt"),
     )
     ses_ms = epoch_ms_fn(out, "last_packet")
     return out.withColumn(
@@ -155,7 +162,7 @@ def sessionize_events(
         # key and emit the bare seq ('1'), silently colliding distinct
         # NULL-key sessions with any key whose string form is empty
         F.concat(
-            F.col(key_col).cast("string"),
+            F.col("user_id").cast("string"),
             F.lit("#"),
             F.col("session_seq").cast("string"),
         ),

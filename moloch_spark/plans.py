@@ -1,5 +1,5 @@
-"""Plan-inspection helpers: assert the plans we design for are the plans
-we get (pushdown, pruning, broadcast, no nested loops)."""
+"""Plan inspection: the formatted physical plan, for tests that assert
+the plans we design for are the plans we get."""
 
 from __future__ import annotations
 
@@ -11,31 +11,3 @@ def formatted_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    return [
-        line.strip()
-        for line in formatted_plan(df).splitlines()
-        if "PushedFilters" in line
-    ]
-
-
-def partition_filters(df: DataFrame) -> list[str]:
-    return [
-        line.strip()
-        for line in formatted_plan(df).splitlines()
-        if "PartitionFilters" in line
-    ]
-
-
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = formatted_plan(df)
-    assert "BroadcastHashJoin" in plan, "expected a broadcast hash join"
-    assert "BroadcastNestedLoopJoin" not in plan, "nested loop join in plan"
-
-
-def assert_pushed(df: DataFrame, *needles: str) -> None:
-    pf = "\n".join(pushed_filters(df))
-    for n in needles:
-        assert n in pf, f"{n!r} not pushed to scan; got: {pf}"

@@ -13,7 +13,7 @@ from moloch_spark.operators.pcap_export import (
     packet_positions,
     pcap_export,
 )
-from moloch_spark.operators.sessionize import assign_sessions
+from moloch_spark.operators.sessionize import sessionize_events
 from moloch_spark.operators.timeutil import epoch_us_fn
 from moloch_spark.registry import register
 from moloch_spark.sources.tables import load_table
@@ -76,20 +76,25 @@ _REC = (
 )
 def q_pcap_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionize the event stream, then stitch each session's packets
-    into a downloadable libpcap blob (the sessions.pcap endpoint)."""
+    into a downloadable libpcap blob (the sessions.pcap endpoint). A row
+    takes the id of the session whose [first, last] span holds it: a
+    key's sessions are disjoint in event time, so the null-safe key
+    join with that range matches each row once."""
     ev = load_table(spark, "events", sf_dir)
-    with_ids = assign_sessions(ev, ["user_id"], "ts", idle_timeout_s=1800)
-    to_us = epoch_us_fn(with_ids, "ts")
-    pkts = with_ids.select(
-        # F.concat (NULL-propagating, matching the oracle's ||), and
-        # NULL props ≡ empty payload — both sides
-        F.concat(
-            F.col("user_id").cast("string"),
-            F.lit("#"),
-            F.col("session_seq").cast("string"),
-        ).alias("session_id"),
+    sess = sessionize_events(ev, idle_timeout_s=1800).select(
+        F.col("user_id").alias("s_user_id"), "first_packet", "last_packet", "session_id"
+    )
+    rows = ev.join(
+        sess,
+        F.col("user_id").eqNullSafe(F.col("s_user_id"))
+        & F.col("ts").between(F.col("first_packet"), F.col("last_packet")),
+    )
+    to_us = epoch_us_fn(rows, "ts")
+    pkts = rows.select(
+        "session_id",
         to_us(F.col("ts")).alias("ts_us"),
         "event_id",
+        # NULL props ≡ empty payload — both sides
         F.lower(
             F.hex(F.encode(F.coalesce(F.col("props"), F.lit("")), "UTF-8"))
         ).alias("payload_hex"),

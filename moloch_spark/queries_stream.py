@@ -310,17 +310,14 @@ def q_sessionize_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sessionize_per_proto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from moloch_spark.operators.sessionize import assign_sessions, timeout_by_protocol
+    from moloch_spark.operators.sessionize import timeout_by_protocol
 
     ev = load_table(spark, "events", sf_dir)
     timeout = timeout_by_protocol(
         "event_type", {"error": 600, "click": 1800}, default_s=3600
     )
-    with_ids = assign_sessions(ev, ["user_id"], "ts", idle_timeout_s=timeout)
-    return with_ids.groupBy("user_id", "session_seq").agg(
-        F.min("ts").alias("first_packet"),
-        F.max("ts").alias("last_packet"),
-        F.count(F.lit(1)).alias("packets"),
+    return sessionize_events(ev, idle_timeout_s=timeout).select(
+        "user_id", "session_seq", "first_packet", "last_packet", "packets"
     )
 
 

@@ -5,10 +5,9 @@ bulk buffers (dbBulkSize=200KB, capture/config.c:528) and POSTs NDJSON
 `_bulk` bodies with index names rotated from lastPacket
 (capture/db.c:472-618,538-577).
 
-Spark shape: foreachBatch over the session stream; each partition
-serializes its rows to NDJSON bulk actions (index line + doc line) and
-ships chunks of ~bulk_bytes to the transport. The transport is
-pluggable:
+Spark shape: each partition of the session table serializes its rows
+to NDJSON bulk actions (index line + doc line) and ships chunks of
+~bulk_bytes to the transport. The transport is pluggable:
 
   * HttpTransport  — POST to /_bulk (real ES; not exercised in this
     container — no ES server — but the code path is the standard
@@ -27,8 +26,6 @@ import os
 import uuid
 from collections.abc import Iterator
 
-import pandas as pd  # top-level: pandas_udf type hints need the real
-                     # class under `from __future__ import annotations`
 from pyspark.sql import DataFrame, Row
 
 
@@ -78,32 +75,6 @@ def index_name_cols(ts, *, prefix: str = "sessions3-"):
         F.concat(p, F.date_format(ts, "yy"), F.lit("w"), wk).alias("weekly"),
         F.concat(p, F.date_format(ts, "yy'm'MM")).alias("monthly"),
     )
-
-
-def index_names_all_udf(*, prefix: str = "sessions3-"):
-    """Arrow-batched form of index_name_cols — kept as the reference
-    implementation the JVM column form is pinned against (and for
-    callers that hold Python datetimes, not columns)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(
-        "struct<hourly:string,daily:string,weekly:string,monthly:string>"
-    )
-    def fn(ts: pd.Series) -> pd.DataFrame:
-        def row(t):
-            if pd.isna(t):  # nulls arrive as NaT, not None
-                return (None, None, None, None)
-            return tuple(
-                index_name(t, prefix=prefix, rotation=r)
-                for r in ("hourly", "daily", "weekly", "monthly")
-            )
-
-        vals = [row(t) for t in ts]
-        return pd.DataFrame(
-            vals, columns=["hourly", "daily", "weekly", "monthly"]
-        )
-
-    return fn
 
 
 def _row_to_bulk(row: Row, *, ts_col: str, id_col: str, prefix: str, rotation: str) -> str:
@@ -179,19 +150,3 @@ def write_bulk(
             transport.send("".join(buf))
 
     sessions.foreachPartition(per_partition)
-
-
-def stream_bulk(
-    sessions: DataFrame,
-    transport,
-    checkpoint: str,
-    **kwargs,
-):
-    """Streaming variant via foreachBatch (the live capture->ES path)."""
-
-    def batch_fn(batch: DataFrame, epoch_id: int) -> None:
-        write_bulk(batch, transport, **kwargs)
-
-    return sessions.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint
-    )

@@ -101,10 +101,17 @@ def write_sessions_stream(
     and its append first drops the files the earlier attempt moved
     (they carry the same token)."""
     import hashlib
+    import os
 
+    from moloch_spark.sources.fs import LocalFS, get_fs
     from moloch_spark.streaming.ledger import committed_epoch, record_epoch
 
-    stream = hashlib.sha1(checkpoint.encode()).hexdigest()[:8]
+    # the token names the checkpoint however its path is spelled, so a
+    # restart with "ckpt/" or an absolute path still drops the files a
+    # crashed attempt of the same epoch moved
+    fs, where = get_fs(checkpoint, sessions.sparkSession)
+    where = os.path.abspath(where) if isinstance(fs, LocalFS) else where.rstrip("/")
+    stream = hashlib.sha1(where.encode()).hexdigest()[:8]
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession

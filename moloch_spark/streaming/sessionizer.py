@@ -1,27 +1,49 @@
-"""Streaming sessionizer — the capture pipeline's stateful core.
+"""The sessionizer kernel and the capture pipeline's stateful core.
 
 Reference: moloch_session_find_or_create + idle-timeout close
 (capture/session.c:419-469,484-543): packets hash to a session key,
 accumulate into per-session state, and the session flushes when idle
 longer than its protocol's timeout (tcp 480s, udp 60s, ... —
-capture/config.c:518-523).
+capture/config.c:518-523); a long session is saved in mid-save chunks
+that share its root (capture/session.c:312-357).
 
-Spark shape: applyInPandasWithState grouped by a key BUCKET,
+One rule, one kernel: ``sessionize_bucket`` is the only code that
+decides an idle close, a chunk boundary and a session's byte sum. Per
+key, in the order it is handed rows: an idle gap longer than the
+INCOMING row's timeout closes the open session; a row whose grid
+index ``(ts − root_us) // chunk_us`` lies past that of the open
+chunk's first row flushes the chunk and keeps the session's root;
+bytes add up as exact decimal(18,4) unscaled integers (``dsum``'s
+sum). Spark computes the kernel's inputs for both callers
+(``operators.sessionize.kernel_input``): epoch µs, the per-row timeout
+and the unscaled value.
+
+The stream sessionizes in ARRIVAL order, micro-batch by micro-batch:
+a row that arrives late but inside the watermark delay joins its key's
+open session (it neither moves the session's start back nor re-opens
+a session an idle gap already closed), and a row below the watermark
+is dropped. The batch sessionizer (``operators.sessionize``) is the
+same kernel with every row in one batch, so it equals the stream
+replayed in event-time order by construction. Where no row arrives
+out of order and the watermark delay covers the largest idle timeout,
+the two agree; with a shorter delay the stream's timer, armed with the
+newest row's timeout, can close a session before a next row whose own
+timeout would have kept it open.
+
+Stream shape: applyInPandasWithState grouped by a key BUCKET,
 ``pmod(xxhash64(user_id), BUCKETS)``, not by the key itself — the
 reference's packet threads likewise own a hash slice of the session
 table. A bucket's state is the array of its keys' open sessions (one
 per key, the reference's hash-table entry), and each session carries
-its own timer. One call per bucket and micro-batch sorts the batch by
-(key, event time) and applies the per-key rule (``sessionize_bucket``):
-data first — an idle gap longer than the INCOMING event's protocol
-timeout closes the open session, ``chunk_s`` flushes mid-save chunks —
-then every session the batch did not touch whose timer lies below the
-clock is flushed. The bucket's own timer is re-armed to its earliest
-session timer, so Spark calls a bucket with no data exactly when one
-of its sessions is due; that call runs the same rule with no rows. The
-clock is the watermark (``streaming_sessionize``, EventTimeTimeout) or
-the batch's processing time (``streaming_sessionize_bounded``,
-ProcessingTimeTimeout, a per-session last-seen TTL).
+its own timer. One call per bucket and micro-batch runs the kernel:
+data first, then every session the batch did not touch whose timer
+lies below the clock is flushed. The bucket's own timer is re-armed to
+its earliest session timer, so Spark calls a bucket with no data
+exactly when one of its sessions is due; that call runs the same rule
+with no rows. The clock is the watermark (``streaming_sessionize``,
+EventTimeTimeout) or the batch's processing time
+(``streaming_sessionize_bounded``, ProcessingTimeTimeout, a
+per-session last-seen TTL).
 
 Grouping by bucket bounds the per-group framework cost (an Arrow round
 trip and a state-store put per group) by BUCKETS instead of by the
@@ -29,9 +51,11 @@ number of keys in a batch; state size is still bounded by OPEN
 sessions only — the reference's maxStreams sizing
 (capture/config.c:525).
 
-Checkpoints written by the earlier per-key sessionizer (grouped by
-user_id, one session per state row) cannot be resumed: the grouping
-key and the state schema both changed. Start such a query from a new
+Checkpoints cannot be resumed across state schema changes: neither one
+of the earlier per-key sessionizer (grouped by user_id, one session per
+state row) nor one of the earlier bucket kernel, whose state kept the
+newest row's event type and a float byte sum where it now keeps that
+row's timeout and an unscaled long sum. Start such a query from a new
 checkpoint location.
 """
 
@@ -51,26 +75,25 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 # hash slices of the key space; each is one state row and one call
 BUCKETS = 64
 
-SESSION_SCHEMA = T.StructType(
+# the kernel's chunk records: times in epoch µs, tot_bytes the exact
+# decimal(18,4) sum as a double, chunk_seq the chunk's ordinal in its
+# session (0, 1, 2, ...)
+CHUNK_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
         T.StructField("root_seq", T.LongType()),
-        T.StructField("first_packet", T.TimestampType()),
-        T.StructField("last_packet", T.TimestampType()),
+        T.StructField("root_us", T.LongType()),
+        T.StructField("first_us", T.LongType()),
+        T.StructField("last_us", T.LongType()),
         T.StructField("packets", T.LongType()),
         T.StructField("tot_bytes", T.DoubleType()),
         T.StructField("event_types", T.ArrayType(T.StringType())),
-        T.StructField("event_types_cnt", T.LongType()),
-        T.StructField("session_id", T.StringType()),
-        # mid-save linkage (capture/db.c:579-596): chunks of one long
-        # session share root_id; chunk_seq orders them
-        T.StructField("root_id", T.StringType()),
         T.StructField("chunk_seq", T.LongType()),
     ]
 )
 
-OVERFLOW_SESSION_SCHEMA = T.StructType(
-    SESSION_SCHEMA.fields
+OVERFLOW_CHUNK_SCHEMA = T.StructType(
+    CHUNK_SCHEMA.fields
     + [
         # True when the flush was forced by the state guardrail before the
         # session's event-time close point — the reference tags such
@@ -82,17 +105,17 @@ OVERFLOW_SESSION_SCHEMA = T.StructType(
 
 @dataclass(slots=True)
 class _Session:
-    """One key's open session (timestamps as epoch micros for exactness)."""
+    """One key's open chunk (timestamps as epoch micros for exactness)."""
 
     root_seq: int
     first_us: int
     last_us: int
     packets: int
-    tot_bytes: float
+    tot_bytes: int | None  # unscaled decimal(18,4) sum; None until a value
     types: list
     root_us: int  # first_us of the ROOT chunk
     chunk_seq: int
-    last_etype: str | None  # the newest event's type arms the idle timer
+    timeout_ms: int  # the newest row's idle timeout arms the timer
     # when the session is due on the sessionizer's clock (watermark or
     # processing time), in epoch ms
     timer_ms: int
@@ -106,63 +129,54 @@ STATE_SCHEMA = T.StructType(
         for name, dt in zip(
             _Session.__slots__,
             [T.LongType(), T.LongType(), T.LongType(), T.LongType(),
-             T.DoubleType(), T.ArrayType(T.StringType()), T.LongType(),
-             T.LongType(), T.StringType(), T.LongType()],
+             T.LongType(), T.ArrayType(T.StringType()), T.LongType(),
+             T.LongType(), T.LongType(), T.LongType()],
         )
     ]
 )
 
 
 class SessionRule(NamedTuple):
-    """The per-key sessionization rule's parameters.
+    """The per-key sessionization rule's parameters (the idle timeouts
+    arrive per row). chunk_us: the mid-save chunk length or None;
+    ttl_ms: None for event-time expiry (a session is due at last seen +
+    its newest row's idle timeout), else the processing-time TTL after
+    the session was last touched."""
 
-    default_ms / by_type_ms: idle timeouts, the per-protocol map keyed
-    by event type (capture/config.c:518-523); chunk_us: the mid-save
-    chunk length or None; ttl_ms: None for event-time expiry (a
-    session is due at last seen + its idle timeout), else the
-    processing-time TTL after the session was last touched."""
-
-    default_ms: int
-    by_type_ms: dict
     chunk_us: int | None
     ttl_ms: int | None = None
 
     @classmethod
-    def of(cls, idle_timeout_s, chunk_s=None, timeout_by_type=None, ttl_s=None):
-        return cls(
-            idle_timeout_s * 1000,
-            {k: v * 1000 for k, v in (timeout_by_type or {}).items()},
-            chunk_s * 1_000_000 if chunk_s else None,
-            ttl_s * 1000 if ttl_s else None,
-        )
-
-    def timeout_ms(self, etype) -> int:
-        return self.by_type_ms.get(etype, self.default_ms)
+    def of(cls, chunk_s=None, ttl_s=None):
+        return cls(chunk_s * 1_000_000 if chunk_s else None, ttl_s * 1000 if ttl_s else None)
 
 
 def sessionize_bucket(
     sessions: dict, rows: pd.DataFrame | None, *, wm_ms: int, now_ms: int, rule: SessionRule
 ) -> list[tuple]:
     """Advance one bucket's open ``sessions`` (key -> _Session, updated
-    in place) by one micro-batch of ``rows`` (ts, user_id, key_null,
-    event_type, value; None on a timer call). Returns the closed
-    sessions and chunks as (key, _Session, overflow) tuples.
+    in place) by one micro-batch of ``rows`` (ts_us, user_id, key_null,
+    event_type, timeout_ms, value, value_null; None on a timer call).
+    Returns the closed sessions and chunks as (key, _Session, overflow)
+    tuples.
 
     Per key, in event-time order within the batch: a row below the
     watermark is dropped — it may belong to a session already emitted
     (the watermark delay IS the lateness tolerance, like
     dropDuplicatesWithinWatermark's contract); a row more than its own
-    protocol's timeout after the open chunk's newest row closes the
-    session and opens the next; a row ``chunk_us`` or more after the
-    chunk's first row flushes the chunk and keeps the session identity
-    (root_us) — capture/session.c:312-357. A key the batch touched
+    timeout after the open chunk's newest row closes the session and
+    opens the next; a row whose grid index ``(ts − root_us) //
+    chunk_us`` exceeds that of the chunk's first row flushes the chunk
+    and keeps the session identity (root_us) — capture/session.c:312-357.
+    A NULL value adds nothing to the byte sum. A key the batch touched
     re-arms its timer; afterwards every untouched session whose timer
     is below the clock is flushed."""
     wm_us = wm_ms * 1000
+    chunk_us = rule.chunk_us
     closed: list[tuple] = []
     touched: set = set()
     if rows is not None and len(rows):
-        ts_us = rows["ts"].to_numpy(dtype="datetime64[ns]").view("int64") // 1000
+        ts_us = rows["ts_us"].to_numpy(dtype="int64")
         uid = rows["user_id"].to_numpy(dtype="int64")
         null = rows["key_null"].to_numpy(dtype=bool)
         # np.lexsort is stable: equal times keep arrival order
@@ -170,30 +184,33 @@ def sessionize_bucket(
         keys = [None if n else int(u) for u, n in zip(uid[order], null[order])]
         touched = set(keys)
         batch = zip(keys, ts_us[order].tolist(),
-                    rows["value"].to_numpy(dtype=float)[order].tolist(),
+                    rows["timeout_ms"].to_numpy(dtype="int64")[order].tolist(),
+                    rows["value"].to_numpy(dtype="int64")[order].tolist(),
+                    rows["value_null"].to_numpy(dtype=bool)[order].tolist(),
                     rows["event_type"].to_numpy(dtype=object)[order].tolist())
-        for key, ts, value, etype in batch:
+        for key, ts, timeout_ms, value, value_null, etype in batch:
             if wm_us > 0 and ts < wm_us:
                 continue
             ses = sessions.get(key)
             if ses is None:
-                ses = sessions[key] = _Session(1, ts, ts, 0, 0.0, [], ts, 0, None, 0)
-            elif ts - ses.last_us > rule.timeout_ms(etype) * 1000:
+                ses = sessions[key] = _Session(1, ts, ts, 0, None, [], ts, 0, 0, 0)
+            elif ts - ses.last_us > timeout_ms * 1000:
                 # idle gap inside the batch: close and start the next
                 closed.append((key, ses, False))
-                ses = sessions[key] = _Session(ses.root_seq + 1, ts, ts, 0, 0.0, [], ts, 0, None, 0)
-            elif rule.chunk_us is not None and ts - ses.first_us >= rule.chunk_us:
+                ses = sessions[key] = _Session(ses.root_seq + 1, ts, ts, 0, None, [], ts, 0, 0, 0)
+            elif chunk_us is not None and (ts - ses.root_us) // chunk_us > (ses.first_us - ses.root_us) // chunk_us:
                 # mid-save: flush the running chunk, keep the session
                 closed.append((key, ses, False))
                 ses = sessions[key] = _Session(
-                    ses.root_seq, ts, ts, 0, 0.0, [], ses.root_us, ses.chunk_seq + 1, None, 0
+                    ses.root_seq, ts, ts, 0, None, [], ses.root_us, ses.chunk_seq + 1, 0, 0
                 )
             ses.packets += 1
-            ses.tot_bytes += value
+            if not value_null:
+                ses.tot_bytes = (ses.tot_bytes or 0) + value
             if etype not in ses.types:
                 ses.types.append(etype)
             ses.last_us = max(ses.last_us, ts)
-            ses.last_etype = etype
+            ses.timeout_ms = timeout_ms
 
     clock_ms = wm_ms if rule.ttl_ms is None else now_ms
     for key in list(sessions):
@@ -204,46 +221,59 @@ def sessionize_bucket(
                 # past last seen + timeout (the session should have
                 # closed during downtime): clamp above the watermark so
                 # it flushes on the next timer pass
-                ses.timer_ms = max(ses.last_us // 1000 + rule.timeout_ms(ses.last_etype), wm_ms + 1)
+                ses.timer_ms = max(ses.last_us // 1000 + ses.timeout_ms, wm_ms + 1)
             else:
                 ses.timer_ms = now_ms + rule.ttl_ms
         elif ses.timer_ms < clock_ms:
             # overflow iff the event-time close was not due yet — the
             # TTL evicts purely to bound state
-            due_us = ses.last_us + rule.timeout_ms(ses.last_etype) * 1000
+            due_us = ses.last_us + ses.timeout_ms * 1000
             closed.append((key, ses, rule.ttl_ms is not None and wm_us < due_us))
             del sessions[key]
     return closed
 
 
-def _closed_frame(closed: list[tuple], with_overflow: bool) -> pd.DataFrame:
-    keys = [k for k, _, _ in closed]
-    first_us = np.array([s.first_us for _, s, _ in closed], dtype="int64")
-    last_us = np.array([s.last_us for _, s, _ in closed], dtype="int64")
+def chunk_frame(closed: list[tuple], with_overflow: bool = False) -> pd.DataFrame:
+    """Closed (key, _Session, overflow) tuples as CHUNK_SCHEMA rows."""
+    ses = [s for _, s, _ in closed]
     # collect_set semantics: NULL event types never enter the set (a
     # mixed None/str set would also crash the sort)
-    types = [sorted({t for t in s.types if t is not None}) for _, s, _ in closed]
+    types = [sorted({t for t in s.types if t is not None}) for s in ses]
     out = {
-        "user_id": pd.array(keys, dtype="Int64"),
-        "root_seq": [s.root_seq for _, s, _ in closed],
-        "first_packet": pd.to_datetime(first_us, unit="us"),
-        "last_packet": pd.to_datetime(last_us, unit="us"),
-        "packets": [s.packets for _, s, _ in closed],
-        "tot_bytes": [round(s.tot_bytes, 4) for _, s, _ in closed],
+        "user_id": pd.array([k for k, _, _ in closed], dtype="Int64"),
+        "root_seq": [s.root_seq for s in ses],
+        "root_us": [s.root_us for s in ses],
+        "first_us": [s.first_us for s in ses],
+        "last_us": [s.last_us for s in ses],
+        "packets": [s.packets for s in ses],
+        # int / int is correctly rounded, as is the decimal -> double cast
+        "tot_bytes": pd.array([None if s.tot_bytes is None else s.tot_bytes / 10_000 for s in ses],
+                              dtype="Float64"),
         "event_types": types,
-        "event_types_cnt": [len(t) for t in types],
-        # ids derive from (key, first-seen time), NOT a per-key counter:
-        # counters reset when timed-out state is evicted, so they collide
-        # across restarts; first_us is stable and replay-idempotent. A
-        # NULL key yields NULL ids — minting 'None#...' would silently
-        # collide NULL-key sessions
-        "session_id": [None if k is None else f"{k}#{s.first_us}" for k, s, _ in closed],
-        "root_id": [None if k is None else f"{k}#{s.root_us}" for k, s, _ in closed],
-        "chunk_seq": [s.chunk_seq for _, s, _ in closed],
+        "chunk_seq": [s.chunk_seq for s in ses],
     }
     if with_overflow:
         out["overflow"] = [o for _, _, o in closed]
     return pd.DataFrame(out)
+
+
+def replay_sorted(frames: Iterator[pd.DataFrame], rule: SessionRule) -> Iterator[pd.DataFrame]:
+    """The kernel over one partition whose rows come sorted by key
+    (key_null, user_id) and event time, batch by batch: a key's open
+    session carries across batches and is flushed once a later key
+    starts, so a task holds one batch plus its open sessions. No
+    watermark: every row counts."""
+    sessions: dict = {}
+    for rows in frames:
+        if not len(rows):
+            continue
+        closed = sessionize_bucket(sessions, rows, wm_ms=0, now_ms=0, rule=rule)
+        last = None if rows["key_null"].iat[-1] else int(rows["user_id"].iat[-1])
+        closed += [(k, sessions.pop(k), False) for k in list(sessions) if k != last]
+        if closed:
+            yield chunk_frame(closed)
+    if sessions:
+        yield chunk_frame([(k, s, False) for k, s in sessions.items()])
 
 
 def _bucket_fn(rule: SessionRule):
@@ -271,38 +301,60 @@ def _bucket_fn(rule: SessionRule):
         elif state.exists:
             state.remove()
         if closed:
-            yield _closed_frame(closed, rule.ttl_ms is not None)
+            yield chunk_frame(closed, rule.ttl_ms is not None)
 
     return fn
 
 
-def _sessionize(events: DataFrame, watermark_delay: str, rule: SessionRule) -> DataFrame:
+def _sessionize(
+    events: DataFrame, watermark_delay: str, idle_timeout_s, timeout_by_type, rule: SessionRule
+) -> DataFrame:
     """NULL-ts rows are dropped (the batch sessionizer's contract): an
     event without event time cannot participate in watermarked idle
-    timing. A NULL key is its own key (key_null): the pandas form of a
-    nullable long column is float64, which would round 64-bit keys."""
-    uid = F.col("user_id")
+    timing. The kernel's chunk records become the capture store's
+    session rows: ids from (key, first-seen time), not from a per-key
+    counter — counters reset when timed-out state is evicted, so they
+    collide across restarts; first_us is stable and replay-idempotent.
+    A NULL key yields NULL ids (concat), never a colliding 'None#...'."""
+    from moloch_spark.operators.sessionize import kernel_input, timeout_by_protocol
+
     ttl = rule.ttl_ms is not None
+    ev = events.filter(F.col("ts").isNotNull()).withWatermark("ts", watermark_delay)
+    timeout = timeout_by_protocol("event_type", timeout_by_type or {}, default_s=idle_timeout_s)
+    key = F.col("user_id").cast("string")
     return (
-        events.filter(F.col("ts").isNotNull())
-        .withWatermark("ts", watermark_delay)
-        .select(
-            F.pmod(F.xxhash64(uid), F.lit(BUCKETS)).alias("bucket"),
+        ev.select(
+            F.pmod(F.xxhash64("user_id"), F.lit(BUCKETS)).alias("bucket"),
+            # the kernel reads ts_us; EventTimeTimeout needs the
+            # watermarked column in its input
             "ts",
-            F.coalesce(uid, F.lit(0)).alias("user_id"),
-            uid.isNull().alias("key_null"),
-            "event_type",
-            "value",
+            *kernel_input(ev, timeout),
         )
         .groupBy("bucket")
         .applyInPandasWithState(
             _bucket_fn(rule),
-            outputStructType=OVERFLOW_SESSION_SCHEMA if ttl else SESSION_SCHEMA,
+            outputStructType=OVERFLOW_CHUNK_SCHEMA if ttl else CHUNK_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=(
                 GroupStateTimeout.ProcessingTimeTimeout if ttl else GroupStateTimeout.EventTimeTimeout
             ),
+        )
+        .select(
+            "user_id",
+            "root_seq",
+            F.timestamp_micros("first_us").alias("first_packet"),
+            F.timestamp_micros("last_us").alias("last_packet"),
+            "packets",
+            "tot_bytes",
+            "event_types",
+            F.size("event_types").cast("long").alias("event_types_cnt"),
+            F.concat(key, F.lit("#"), F.col("first_us").cast("string")).alias("session_id"),
+            # mid-save linkage (capture/db.c:579-596): chunks of one long
+            # session share root_id; chunk_seq orders them
+            F.concat(key, F.lit("#"), F.col("root_us").cast("string")).alias("root_id"),
+            "chunk_seq",
+            *(["overflow"] if ttl else []),
         )
     )
 
@@ -318,16 +370,17 @@ def streaming_sessionize(
     """events (streaming DF with ts/user_id/event_type/value) -> stream of
     CLOSED sessions (and mid-save chunks when chunk_s is set).
 
-    chunk_s = the tcpSaveTimeout analog: a session open longer than
-    chunk_s is flushed as a partial chunk (counters reset, root_id and
-    first-seen identity retained) — capture/session.c:312-357.
+    chunk_s = the tcpSaveTimeout analog: a session is cut into chunks
+    on a chunk_s grid from its first row, each flushed as a partial
+    chunk (counters reset, root_id and first-seen identity retained) —
+    capture/session.c:312-357.
     timeout_by_type = the per-protocol idle timeouts
-    (capture/config.c:518-523: tcp 480, udp 60, icmp 10, ...): the gap
-    decision uses the INCOMING event's type, `idle_timeout_s` is the
-    default — the batch `timeout_by_protocol` column's semantics. An
-    open session flushes when the watermark passes its last event plus
-    that event's timeout. NULL-ts rows are dropped."""
-    return _sessionize(events, watermark_delay, SessionRule.of(idle_timeout_s, chunk_s, timeout_by_type))
+    (capture/config.c:518-523: tcp 480, udp 60, icmp 10, ...), with
+    `idle_timeout_s` the default, through the batch sessionizer's
+    `timeout_by_protocol`: the gap decision uses the INCOMING event's
+    timeout. An open session flushes when the watermark passes its
+    last event plus that event's timeout. NULL-ts rows are dropped."""
+    return _sessionize(events, watermark_delay, idle_timeout_s, timeout_by_type, SessionRule.of(chunk_s))
 
 
 def streaming_sessionize_bounded(
@@ -354,7 +407,7 @@ def streaming_sessionize_bounded(
     is — the same determinism trade the reference makes when
     maxStreams evicts under pressure. NULL-ts rows are dropped."""
     return _sessionize(
-        events, watermark_delay, SessionRule.of(idle_timeout_s, chunk_s, timeout_by_type, state_ttl_s)
+        events, watermark_delay, idle_timeout_s, timeout_by_type, SessionRule.of(chunk_s, state_ttl_s)
     )
 
 

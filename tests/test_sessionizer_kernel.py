@@ -43,33 +43,45 @@ def replay_per_key(batches, rule: SessionRule):
                 if wm_us > 0 and ts < wm_us:
                     continue
                 if st_ is None:
-                    st_ = [1, ts, ts, 0, 0.0, [], ts, 0, None]
-                elif ts - st_[2] > rule.timeout_ms(etype) * 1000:
+                    st_ = [1, ts, ts, 0, None, [], ts, 0, 0]
+                elif ts - st_[2] > timeout_ms(etype) * 1000:
                     out.append((key, *st_[:8], False))
-                    st_ = [st_[0] + 1, ts, ts, 0, 0.0, [], ts, 0, None]
-                elif rule.chunk_us is not None and ts - st_[1] >= rule.chunk_us:
+                    st_ = [st_[0] + 1, ts, ts, 0, None, [], ts, 0, 0]
+                elif rule.chunk_us is not None and grid(ts, st_[6], rule) > grid(st_[1], st_[6], rule):
                     out.append((key, *st_[:8], False))
-                    st_ = [st_[0], ts, ts, 0, 0.0, [], st_[6], st_[7] + 1, None]
+                    st_ = [st_[0], ts, ts, 0, None, [], st_[6], st_[7] + 1, 0]
                 st_[3] += 1
-                st_[4] += value
+                if value is not None:
+                    st_[4] = (st_[4] or 0) + value
                 if etype not in st_[5]:
                     st_[5].append(etype)
                 st_[2] = max(st_[2], ts)
-                st_[8] = etype
+                st_[8] = timeout_ms(etype)
             if st_ is None:
                 continue
             state[key] = st_
             if rule.ttl_ms is None:
-                timers[key] = max(st_[2] // 1000 + rule.timeout_ms(st_[8]), wm_ms + 1)
+                timers[key] = max(st_[2] // 1000 + st_[8], wm_ms + 1)
             else:
                 timers[key] = now_ms + rule.ttl_ms
         clock = wm_ms if rule.ttl_ms is None else now_ms
         for key in [k for k in state if k not in by_key and timers[k] < clock]:
             st_ = state.pop(key)
-            due_us = st_[2] + rule.timeout_ms(st_[8]) * 1000
+            due_us = st_[2] + st_[8] * 1000
             out.append((key, *st_[:8], rule.ttl_ms is not None and wm_us < due_us))
         emitted.append(_canon(out))
     return emitted, _canon((k, *s[:8], False) for k, s in state.items())
+
+
+def timeout_ms(etype) -> int:
+    """The per-row idle timeout, as timeout_by_protocol computes it."""
+    return TIMEOUTS.get(etype, DEFAULT_S) * 1000
+
+
+def grid(ts: int, root_us: int, rule: SessionRule) -> int:
+    """A row's mid-save chunk index: whole chunk lengths since its
+    session's first row."""
+    return (ts - root_us) // rule.chunk_us
 
 
 def run_buckets(batches, rule: SessionRule, n_buckets: int):
@@ -101,54 +113,63 @@ def run_buckets(batches, rule: SessionRule, n_buckets: int):
 
 
 def _fields(s):
-    return astuple(s)[:8]  # all but last_etype and timer_ms
+    return astuple(s)[:8]  # all but timeout_ms and timer_ms
 
 
 def _canon(rows):
     return sorted(
-        ((k is None, k or 0), seq, f, la, p, round(b, 4), tuple(sorted(t for t in types if t is not None)), r, c, o)
+        ((k is None, k or 0), seq, f, la, p, b, tuple(sorted(t for t in types if t is not None)), r, c, o)
         for k, seq, f, la, p, b, types, r, c, o in rows
     )
 
 
 def _frame(rows) -> pd.DataFrame:
+    """(key, ts_us, event type, unscaled value) rows as the kernel's
+    input columns, as kernel_input computes them in Spark."""
     keys = [r[0] for r in rows]
+    values = [r[3] for r in rows]
     return pd.DataFrame(
         {
-            "ts": pd.to_datetime(np.array([r[1] for r in rows], dtype="int64"), unit="us"),
+            "ts_us": np.array([r[1] for r in rows], dtype="int64"),
             "user_id": np.array([0 if k is None else k for k in keys], dtype="int64"),
             "key_null": np.array([k is None for k in keys], dtype=bool),
             "event_type": pd.Series([r[2] for r in rows], dtype=object),
-            "value": np.array([r[3] for r in rows], dtype=float),
+            "timeout_ms": np.array([timeout_ms(r[2]) for r in rows], dtype="int64"),
+            "value": np.array([0 if v is None else v for v in values], dtype="int64"),
+            "value_null": np.array([v is None for v in values], dtype=bool),
         }
     )
 
 
 # gaps that land on, just below and just above the idle timeouts and
-# chunk length, in µs, plus arbitrary ones
+# chunk lengths, in µs, plus arbitrary ones; short ones keep sessions
+# open for several chunks
 GAPS = st.one_of(
-    st.sampled_from([0, 1, 500, 999_000, 1_000_001, 2_999_999, 3_000_000, 3_000_001,
+    st.sampled_from([0, 1, 500, 999_000, 1_000_001, 2_000_000, 2_999_999, 3_000_000, 3_000_001,
                      3_000_500, 5_000_001, 6_000_000, 8_000_000, 8_000_001]),
+    st.integers(0, 1_500_000),
     st.integers(0, 12_000_000),
 )
 
 
 @st.composite
 def streams(draw):
-    """Micro-batches of (key, ts_us, event type, value) rows in arrival
-    order with the watermark and processing time each batch runs at.
-    Some rows arrive back in time: out of order inside the watermark
+    """Micro-batches of (key, ts_us, event type, unscaled value) rows in
+    arrival order with the watermark and processing time each batch runs
+    at. Some rows arrive back in time: out of order inside the watermark
     delay, or late beyond it. Two empty batches end the stream: one at
     the final watermark, one far past it, which flush open sessions."""
     clock, now_ms, max_us, batches = BASE_US, 1_000, 0, []
+    # few keys: each key's rows close together, sessions of many chunks
+    keys = draw(st.sampled_from([KEYS, [1], [None, 2**62 + 7]]))
     for _ in range(draw(st.integers(1, 6))):
         wm_ms = max(0, max_us // 1000 - DELAY_MS)
         rows = []
         for _ in range(draw(st.integers(0, 10))):
             clock += draw(GAPS)
             back = draw(st.sampled_from([0, 0, 0, 400_000, 1_500_000, 2_500_000, 4_000_000]))
-            rows.append((draw(st.sampled_from(KEYS)), clock - back, draw(st.sampled_from(ETYPES)),
-                         draw(st.sampled_from([1.0, 0.25, 1e-5, 3.5]))))
+            rows.append((draw(st.sampled_from(keys)), clock - back, draw(st.sampled_from(ETYPES)),
+                         draw(st.sampled_from([10_000, 2_500, 1, 35_000, None]))))
         batches.append((rows, wm_ms, now_ms))
         max_us = max([max_us] + [r[1] for r in rows])
         now_ms += draw(st.sampled_from([100, 1_000, 4_000, 4_001, 5_000]))
@@ -161,12 +182,12 @@ def streams(draw):
 @settings(max_examples=300, deadline=None)
 @given(
     streams(),
-    st.sampled_from([None, 6]),
+    st.sampled_from([None, 2, 6]),
     st.sampled_from([None, 4]),
     st.integers(1, 4),
 )
 def test_bucket_kernel_matches_per_key_replay(batches, chunk_s, ttl_s, n_buckets):
-    rule = SessionRule.of(DEFAULT_S, chunk_s, TIMEOUTS, ttl_s)
+    rule = SessionRule.of(chunk_s, ttl_s)
     assert run_buckets(batches, rule, n_buckets) == replay_per_key(batches, rule)
 
 
@@ -184,11 +205,11 @@ def test_restart_past_due_session_flushes_after_the_clamped_timer():
     watermark, so it survives that batch and a timer pass at that ms,
     and flushes on the first pass past the clamp, as in the per-key
     replay."""
-    rule = SessionRule.of(DEFAULT_S, None, TIMEOUTS)
+    rule = SessionRule.of()
     wm = BASE_US // 1000 + 20_000  # restored watermark, 12 s past due
     batches = [
-        ([(1, BASE_US, "tcp", 1.0)], 0, 1_000),
-        ([(1, BASE_US + 1_000, "tcp", 1.0)], wm, 2_000),  # late only
+        ([(1, BASE_US, "tcp", 10_000)], 0, 1_000),
+        ([(1, BASE_US + 1_000, "tcp", 10_000)], wm, 2_000),  # late only
         ([], wm + 1, 3_000),
         ([], wm + 2, 4_000),
     ]
