@@ -74,6 +74,13 @@ def get_spark(app_name: str = "moloch_spark", *, cpus: int | None = None) -> Spa
         # daemon importable from any working directory.
         .config("spark.python.daemon.module", "moloch_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # No Python call site on every Column call: with it on, each
+        # F.col is ~13 py4j round trips (active session, conf read,
+        # set/clear of PySparkCurrentOrigin) instead of ~3. The cost is
+        # that error messages no longer name the Python line that built
+        # the failing expression; to debug, build a session with this
+        # set to true.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -70,10 +70,25 @@ Remaining race: an append and a rewrite of the same partition must not
 overlap — files an append moves into a directory the rewrite has
 already read are dropped when the rewrite lands. Rewrite (compact,
 optimize, tag) closed days only.
+
+Store stamp: `<store>/_stamp` holds a fresh uuid after every change a
+reader can see, so a reader may keep the relation it opened for as
+long as the stamp it read before opening is unchanged
+(session_store.read_sessions). Every writer bumps it through
+`stamped`, once before its first visible change and once after its
+last: `_write_manifest` (so every commit_manifest_entries commit),
+PartitionCommitter.append, the rename swaps of
+PartitionCommitter.commit, and expire_partitions' plain-dir deletes.
+A write that dies midway has still bumped once, so a relation opened
+before it is not reused. `write_sessions(mode="overwrite")` is one
+plain Spark write that deletes the whole store, stamp included, and a
+store without a stamp is always opened afresh. Vacuum removes only
+what no reader can resolve and does not bump.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import posixpath
@@ -82,12 +97,34 @@ import threading
 import time
 import uuid
 
+from py4j.protocol import Py4JError
+
 from moloch_spark.sources.fs import get_fs, is_posix_path
 
 MANIFEST = "_manifest.json"
 _VPREFIX = "_manifest.v"
 _LOCK = "_manifest.lock"
 MANIFEST_LOCK_TTL_S = 60.0
+STAMP = "_stamp"
+
+
+def read_stamp(fs, root: str) -> str | None:
+    """The store's stamp; None for a store that has none."""
+    try:
+        return fs.read_text(posixpath.join(root, STAMP))
+    except (OSError, Py4JError):  # missing: locally, and on Hadoop
+        return None
+
+
+@contextlib.contextmanager
+def stamped(fs, root: str):
+    """Bump the store's stamp around a write: before its first visible
+    change and after its last, also when it raises."""
+    fs.put_text_atomic(posixpath.join(root, STAMP), uuid.uuid4().hex)
+    try:
+        yield
+    finally:
+        fs.put_text_atomic(posixpath.join(root, STAMP), uuid.uuid4().hex)
 
 
 def _store_clock(fs, root: str) -> float:
@@ -314,11 +351,14 @@ def _write_manifest(store: str, partitions: dict[str, str], spark=None) -> None:
     body = json.dumps({"partitions": partitions}, sort_keys=True)
     versions = manifest_versions(store, spark)
     v = (versions[-1] + 1) if versions else 1
-    fs.put_text_atomic(
-        posixpath.join(root, f"{_VPREFIX}{v:08d}-{uuid.uuid4().hex[:12]}.json"),
-        body,
-    )
-    fs.put_text_atomic(posixpath.join(root, MANIFEST), body)
+    with stamped(fs, root):
+        fs.put_text_atomic(
+            posixpath.join(
+                root, f"{_VPREFIX}{v:08d}-{uuid.uuid4().hex[:12]}.json"
+            ),
+            body,
+        )
+        fs.put_text_atomic(posixpath.join(root, MANIFEST), body)
 
 
 def commit_manifest_entries(
@@ -613,11 +653,12 @@ class PartitionCommitter:
                 spark=self._spark,
             )
             return [p for p in partitions if final.get(p) == ours[p]]
-        for p in partitions:
-            swap_dir(
-                posixpath.join(self._staging, p),
-                posixpath.join(self.store, p),
-            )
+        with stamped(self._fs, self.store):
+            for p in partitions:
+                swap_dir(
+                    posixpath.join(self._staging, p),
+                    posixpath.join(self.store, p),
+                )
         self._fs.delete(self._staging)
         return list(partitions)
 
@@ -641,32 +682,33 @@ class PartitionCommitter:
         versioned: time travel through an older snapshot that names the
         partition sees them too."""
         created = {}
-        for name in self._fs.listdir(self._staging):
-            if "=" not in name or name.startswith(("_", ".")):
-                continue
-            dst = self.parts.get(name)
-            if dst is None:
-                rel = name
-                if self.manifest is not None:
-                    rel = posixpath.join("_gen", f"{self.token}.a", name)
-                if self.manifest_mode:
-                    created[name] = rel
-                dst = posixpath.join(self.store, rel)
-            self._move(posixpath.join(self._staging, name), dst)
-        if created:
-            final = commit_manifest_entries(
-                self.store,
-                created,
-                expected=dict.fromkeys(created),
-                spark=self._spark,
-            )
-            for name, rel in created.items():
-                # None: an expiry removed the day meanwhile, and wins
-                if final.get(name) not in (rel, None):
-                    self._move(
-                        posixpath.join(self.store, rel),
-                        posixpath.join(self.store, final[name]),
-                    )
+        with stamped(self._fs, self.store):
+            for name in self._fs.listdir(self._staging):
+                if "=" not in name or name.startswith(("_", ".")):
+                    continue
+                dst = self.parts.get(name)
+                if dst is None:
+                    rel = name
+                    if self.manifest is not None:
+                        rel = posixpath.join("_gen", f"{self.token}.a", name)
+                    if self.manifest_mode:
+                        created[name] = rel
+                    dst = posixpath.join(self.store, rel)
+                self._move(posixpath.join(self._staging, name), dst)
+            if created:
+                final = commit_manifest_entries(
+                    self.store,
+                    created,
+                    expected=dict.fromkeys(created),
+                    spark=self._spark,
+                )
+                for name, rel in created.items():
+                    # None: an expiry removed the day meanwhile, and wins
+                    if final.get(name) not in (rel, None):
+                        self._move(
+                            posixpath.join(self.store, rel),
+                            posixpath.join(self.store, final[name]),
+                        )
         self._fs.delete(self._staging)
 
     def _move(self, src: str, dst: str) -> None:

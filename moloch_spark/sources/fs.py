@@ -284,3 +284,9 @@ def get_fs(path: str, spark=None) -> tuple[object, str]:
             "refusing to fall back to local relative paths"
         )
     return HadoopFS(spark, path), path
+
+
+def canonical(fs, root: str) -> str:
+    """`root` (from get_fs) however it is spelled: absolute for a local
+    path, without a trailing slash for a URI."""
+    return os.path.abspath(root) if isinstance(fs, LocalFS) else root.rstrip("/")

@@ -101,16 +101,14 @@ def write_sessions_stream(
     and its append first drops the files the earlier attempt moved
     (they carry the same token)."""
     import hashlib
-    import os
 
-    from moloch_spark.sources.fs import LocalFS, get_fs
+    from moloch_spark.sources.fs import canonical, get_fs
     from moloch_spark.streaming.ledger import committed_epoch, record_epoch
 
     # the token names the checkpoint however its path is spelled, so a
     # restart with "ckpt/" or an absolute path still drops the files a
     # crashed attempt of the same epoch moved
-    fs, where = get_fs(checkpoint, sessions.sparkSession)
-    where = os.path.abspath(where) if isinstance(fs, LocalFS) else where.rstrip("/")
+    where = canonical(*get_fs(checkpoint, sessions.sparkSession))
     stream = hashlib.sha1(where.encode()).hexdigest()[:8]
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -129,6 +127,10 @@ def write_sessions_stream(
     )
 
 
+# (session, store) -> (stamp, the relation opened under that stamp)
+_OPENED: dict[tuple[SparkSession, str], tuple[str, DataFrame]] = {}
+
+
 def read_sessions(
     spark: SparkSession, path: str, *, version: int | None = None
 ) -> DataFrame:
@@ -138,10 +140,37 @@ def read_sessions(
     one. `day` is the partition dir's `yyyy-MM-dd` string either way.
     `version` time-travels to a retained manifest snapshot — a long
     job spanning maintenance commits pins its read to one version and
-    stays reproducible as long as vacuum retention covers it."""
-    from moloch_spark.sources.commit import read_store
+    stays reproducible as long as vacuum retention covers it.
 
-    return read_store(spark, path, PARTITION_COL, version=version)
+    Reuse, the reference's cached index list (viewer/db.js:1855): a
+    read of the current version on a store with a stamp returns the
+    relation this session opened under that stamp, with no listing and
+    no schema job. Every write through `write_sessions` or
+    sources/commit.PartitionCommitter bumps the stamp (sources/commit),
+    so the next read opens afresh. A file put into the store any other
+    way is not seen by a reader holding a relation until the next such
+    write. `version` reads and stores without a stamp (built by
+    `write_sessions(mode="overwrite")` and not written since) always
+    open afresh."""
+    from moloch_spark.sources.commit import read_stamp, read_store
+    from moloch_spark.sources.fs import canonical, get_fs
+
+    if version is not None:
+        return read_store(spark, path, PARTITION_COL, version=version)
+    fs, root = get_fs(path, spark)
+    key = (spark, canonical(fs, root))
+    # read before the open: a write landing during the open bumps the
+    # stamp again, so its half-seen state is never reused
+    stamp = read_stamp(fs, root)
+    held = _OPENED.get(key)
+    if stamp is not None and held is not None and held[0] == stamp:
+        return held[1]
+    df = read_store(spark, path, PARTITION_COL)
+    if stamp is None:
+        _OPENED.pop(key, None)
+    else:
+        _OPENED[key] = (stamp, df)
+    return df
 
 
 def time_bounded(
@@ -226,6 +255,7 @@ def expire_partitions(
         ORPHAN_COMMIT_GRACE_S,
         PartitionCommitter,
         commit_manifest_entries,
+        stamped,
         vacuum_store,
     )
     from moloch_spark.sources.fs import get_fs
@@ -239,9 +269,10 @@ def expire_partitions(
     if dry_run or not dropped:
         return dropped
     if store.manifest is None:
-        fs, _root = get_fs(path, spark)
-        for name in dropped:
-            fs.delete(store.parts[name])
+        fs, root = get_fs(path, spark)
+        with stamped(fs, root):
+            for name in dropped:
+                fs.delete(store.parts[name])
         return dropped
     commit_manifest_entries(path, removals=dropped, spark=spark)
     vacuum_store(path, retain_s=vacuum_retain_s, spark=spark)
